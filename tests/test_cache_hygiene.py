@@ -86,3 +86,40 @@ def test_cc_no_cachemanager_entry_growth(spark):
     assert cc.filter(F.col("cluster_id") != 0).count() == 0
     release_caches()
     assert cm.isEmpty(), "CacheManager entries leaked by the CC loop"
+
+
+def test_incremental_merge_leaves_no_blocks(spark):
+    """The merge checkpoints its parsed batch and its scoped recompute and
+    drops those blocks itself; the recompute plan's own tracked caches go
+    to the caller's scoped_releases() block. After the block, the merge
+    has left no persistent RDD and no CacheManager entry behind."""
+    import json
+    import tempfile
+
+    from twilio_event_streams_reporting_example_spark.registry import scoped_releases
+    from twilio_event_streams_reporting_example_spark.sources.incremental import (
+        incremental_taskrouter_update,
+        initialize_taskrouter,
+    )
+    from twilio_event_streams_reporting_example_spark.taskrouter.fixture import (
+        FIXTURE_EVENTS,
+    )
+
+    sc = spark.sparkContext
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    rows = [(i, json.dumps(e)) for i, e in enumerate(FIXTURE_EVENTS)]
+    half = len(rows) // 2
+    first, second = (
+        spark.createDataFrame(part, "arrival_idx bigint, raw string")
+        for part in (rows[:half], rows[half:])
+    )
+    with tempfile.TemporaryDirectory() as d:
+        initialize_taskrouter(spark, first, d)
+        release_caches()
+        spark.catalog.clearCache()
+        baseline = set(persistent_rdd_entries(sc))
+        assert cm.isEmpty()
+        with scoped_releases():
+            incremental_taskrouter_update(spark, second, d)
+        assert not (set(persistent_rdd_entries(sc)) - baseline)
+        assert cm.isEmpty(), "CacheManager entries left by the merge"

@@ -136,20 +136,42 @@ def test_frame_sample_shuffle_free(spark, sf_dir):
     assert "Exchange" not in plan
 
 
+def _node_col(line: str) -> int:
+    """Column where a plan-tree line's operator name starts."""
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def _ancestors(lines: list[str], i: int) -> list[str]:
+    """The operator lines above line ``i`` of a plan-tree string."""
+    col, out = _node_col(lines[i]), []
+    for ln in reversed(lines[:i]):
+        if _node_col(ln) < col:
+            col = _node_col(ln)
+            out.append(ln.strip(" :+-"))
+    return out
+
+
 def test_incremental_scoping_joins_broadcast(spark):
-    """The incremental recompute scopes the event log with BROADCAST
-    semi-joins on the affected keys — a shuffled semi-join would drag the
-    full log through an exchange on every daily merge."""
+    """The merge scopes the event log with BROADCAST joins on the
+    affected keys — a shuffled join would drag the full log through an
+    exchange on every daily merge. Inspects the plan the merge builds:
+    ``scoped_history`` over the stored log, keyed by ``affected_keys``
+    of a parsed batch. Only broadcast exchanges may sit over the log
+    scan."""
     import json
     import tempfile
 
+    from twilio_event_streams_reporting_example_spark.plans.taskrouter import (
+        ingest_taskrouter,
+    )
     from twilio_event_streams_reporting_example_spark.sources.incremental import (
+        affected_keys,
         initialize_taskrouter,
+        scoped_history,
     )
     from twilio_event_streams_reporting_example_spark.taskrouter.fixture import (
         FIXTURE_EVENTS,
     )
-    from pyspark.sql import functions as F
 
     with tempfile.TemporaryDirectory() as d:
         raw = spark.createDataFrame(
@@ -157,12 +179,18 @@ def test_incremental_scoping_joins_broadcast(spark):
             "arrival_idx bigint, raw string",
         )
         initialize_taskrouter(spark, raw, d)
-        log = spark.read.parquet(f"{d}/event_log")
-        keys = log.select("task_sid").filter(F.col("task_sid").isNotNull()).distinct()
-        scoped = log.join(F.broadcast(keys), "task_sid", "left_semi")
+        log = spark.read.parquet(f"{d}/event_log").drop("event_date")
+        aff_tasks, aff_workers = affected_keys(ingest_taskrouter(raw.limit(10)))
+        scoped = scoped_history(log, aff_tasks, aff_workers)
         plan = scoped._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan
-        assert "LeftSemi" in plan
+        assert plan.count("BroadcastHashJoin") == 2, plan
+        assert "SortMergeJoin" not in plan, plan
+        lines = plan.splitlines()
+        scans = [i for i, ln in enumerate(lines) if "FileScan" in ln and "event_log" in ln]
+        assert len(scans) == 1, plan
+        above = _ancestors(lines, scans[0])
+        assert not [a for a in above if a.startswith("Exchange")], above
+        assert scoped.count() > 0
 
 
 def test_bucketed_join_single_exchange(spark, sf_dir):
@@ -205,32 +233,105 @@ def test_doc_text_profile_single_partitioning(spark, sf_dir):
     assert keys <= {"doc_id", "whash"}, keys
 
 
-def test_knn_methods_only_exact_variants_broadcast_nested_loop(spark, sf_dir):
-    """The union plan may contain the exact variants' deliberate 8-row
-    broadcast cross joins but no cartesian product anywhere.
+def _split_top(expr: str, sep: str) -> list[str]:
+    """Split ``expr`` on ``sep`` where it sits outside every paren."""
+    parts, depth, start, k = [], 0, 0, 0
+    while k < len(expr):
+        ch = expr[k]
+        depth += ch == "("
+        depth -= ch == ")"
+        if depth == 0 and expr.startswith(sep, k):
+            parts.append(expr[start:k])
+            k += len(sep)
+            start = k
+            continue
+        k += 1
+    return parts + [expr[start:]]
 
-    r16 (advisor ask): the BNLJ allowlist cap in tools/plan_audit.py
-    must not be the sole guard — every BNLJ in this plan has to be one
-    of the deliberate CONDITION-FREE cross joins against a broadcast
-    tiny frame (the 8-row query batch, the 1-row collected centroid
-    array, the 1-row PQ LUT/seed rows). A degenerated equi-join hiding
-    under the cap would surface as a BNLJ with a join condition (or a
-    non-Cross build) and fail the shape assertion; a NEW cross join
-    creeping in fails the exact count."""
+
+def _closing(expr: str, k: int) -> int:
+    """Index of the paren that closes the one at ``expr[k]``."""
+    depth = 0
+    for j in range(k, len(expr)):
+        depth += (expr[j] == "(") - (expr[j] == ")")
+        if depth == 0:
+            return j
+    return -1
+
+
+def _strip_parens(expr: str) -> str:
+    """Drop parens that wrap the whole of ``expr``."""
+    while expr.startswith("(") and _closing(expr, 0) == len(expr) - 1:
+        expr = expr[1:-1]
+    return expr
+
+
+def _conjuncts(expr: str) -> list[str]:
+    parts = _split_top(_strip_parens(expr), " AND ")
+    if len(parts) == 1:
+        return parts
+    return [c for p in parts for c in _conjuncts(p)]
+
+
+def _pushed_centroid_filter(conjunct: str) -> bool:
+    """The filters Spark pushes into knn_methods' centroid cross joins:
+    ``isnotnull(<nearest>.centroid_id)`` and ``<nearest>.centroid_id < 16``."""
+    call = len("isnotnull")
+    if conjunct.startswith("isnotnull(") and conjunct.endswith(".centroid_id)"):
+        return _closing(conjunct, call) == len(conjunct) - 1
+    lhs = _split_top(conjunct, " < ")
+    return len(lhs) == 2 and lhs[0].endswith(".centroid_id") and lhs[1] == "16"
+
+
+def _bnlj_violations(plan: str) -> list[str]:
+    """BroadcastNestedLoopJoin lines that are not a Cross join, or that
+    carry a condition other than the pushed centroid filters."""
     import re
 
+    bad = []
+    for ln in plan.splitlines():
+        if "BroadcastNestedLoopJoin" not in ln:
+            continue
+        m = re.search(r"BroadcastNestedLoopJoin Build(Left|Right), Cross(?:, (.*))?$", ln)
+        if m is None or (
+            m.group(2) is not None
+            and not all(_pushed_centroid_filter(c) for c in _conjuncts(m.group(2)))
+        ):
+            bad.append(ln)
+    return bad
+
+
+def test_knn_methods_only_exact_variants_broadcast_nested_loop(spark, sf_dir):
+    """The union plan may contain the exact variants' deliberate
+    broadcast cross joins but no cartesian product anywhere.
+
+    The BNLJ allowlist cap in tools/plan_audit.py must not be the sole
+    guard: every BNLJ in this plan has to be one of the deliberate Cross
+    joins against a broadcast tiny frame (the 8-row query batch, the
+    1-row collected centroid array, the 1-row PQ LUT/seed rows). Eight
+    of them carry filters Spark pushes into the join from the IVF
+    branches — ``isnotnull(...centroid_id)`` and ``centroid_id < 16`` on
+    the nearest centroid — and those are the only conditions allowed. A
+    degenerated equi-join hiding under the cap would surface as a BNLJ
+    with another condition (or a non-Cross join) and fail; a NEW cross
+    join creeping in fails the exact count. The negative controls inject
+    an equi-condition into a real BNLJ line of the plan."""
     plan = _plan(spark, "knn_methods", sf_dir)
     assert "CartesianProduct" not in plan
     bnlj = [
         ln for ln in plan.splitlines() if "BroadcastNestedLoopJoin" in ln
     ]
     assert len(bnlj) == 14, (len(bnlj), bnlj)
-    for ln in bnlj:
-        # shape: "BroadcastNestedLoopJoin BuildLeft|BuildRight, Cross"
-        # and NOTHING after (a condition would print ", (expr)")
-        assert re.search(
-            r"BroadcastNestedLoopJoin Build(Left|Right), Cross\s*$", ln
-        ), ln
+    assert _bnlj_violations(plan) == []
+
+    bare = next(ln for ln in bnlj if ln.rstrip().endswith(", Cross"))
+    pushed = next(ln for ln in bnlj if "centroid_id < 16" in ln)
+    for line, injected in (
+        (bare, bare.rstrip() + ", (query_id#1L = doc_id#2L)"),
+        (pushed, pushed.rstrip()[:-1] + " AND (query_id#1L = doc_id#2L))"),
+        (bare, bare.replace(", Cross", ", Inner")),
+    ):
+        assert _bnlj_violations(plan.replace(line, injected, 1)) == [injected]
 
 
 def test_corpus_prep_tokenizes_once(spark, sf_dir):

@@ -10,14 +10,17 @@ def test_materialize_and_read_back(spark):
         taskrouter_agents_df,
         taskrouter_segments_df,
     )
-    from twilio_event_streams_reporting_example_spark.sources.sinks import (
-        materialize_taskrouter,
+    from twilio_event_streams_reporting_example_spark.sources.incremental import (
+        initialize_taskrouter,
     )
     from twilio_event_streams_reporting_example_spark.taskrouter.fixture import fixture_df
+    from twilio_event_streams_reporting_example_spark.taskrouter.schema import (
+        AGENT_COLUMNS,
+    )
 
     raw = fixture_df(spark)
     with tempfile.TemporaryDirectory() as d:
-        paths = materialize_taskrouter(spark, raw, d)
+        paths = initialize_taskrouter(spark, raw, d)
 
         log = spark.read.parquet(paths["event_log"])
         # 49 distinct taskrouter events (1 dup dropped, 1 non-taskrouter dropped)
@@ -29,8 +32,10 @@ def test_materialize_and_read_back(spark):
         assert seg.count() == live.count()
         assert seg.select(live.columns).exceptAll(live).count() == 0
 
-        ag = spark.read.parquet(paths["agents"])
-        live_ag = taskrouter_agents_df(spark, raw)
+        # the stored dimension also keeps last_ts for later merges
+        cols = [c for c, _ in AGENT_COLUMNS]
+        ag = spark.read.parquet(paths["agents"]).select(*cols)
+        live_ag = taskrouter_agents_df(spark, raw).select(*cols)
         assert ag.exceptAll(live_ag).count() == 0
         assert live_ag.exceptAll(ag).count() == 0
 

@@ -700,8 +700,14 @@ def taskrouter_agents_df(
     event's raw timestamp) so incremental upsert sinks can merge this
     batch's rows against an existing dimension (streaming foreachBatch
     path)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    parsed = ingest_taskrouter(raw)
+    return agents_from_parsed(ingest_taskrouter(raw), with_ordering)
+
+
+def agents_from_parsed(parsed: DataFrame, with_ordering: bool = False) -> DataFrame:
+    """The agents dimension over an ALREADY-PARSED (id-deduplicated)
+    event log — the entry the incremental merge uses on the batch it has
+    already parsed (see :func:`taskrouter_agents_df`)."""
+    parsed.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
     et = F.col("eventtype")
     workers = parsed.filter(
         et.isin(

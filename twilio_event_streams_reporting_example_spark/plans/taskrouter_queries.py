@@ -1025,13 +1025,12 @@ def taskrouter_segments_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
 def taskrouter_materialized_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from ..sources.sinks import materialize_taskrouter
-
     from ..registry import pin_checkpoint
+    from ..sources.incremental import initialize_taskrouter
 
     cols = [c for c, _ in S.SEGMENT_COLUMNS]
     with tempfile.TemporaryDirectory() as d:
-        paths = materialize_taskrouter(spark, fixture_df(spark), d)
+        paths = initialize_taskrouter(spark, fixture_df(spark), d)
         seg = spark.read.parquet(paths["segments"])
         ids = seg.agg(
             F.count(F.lit(1)).alias("n"),

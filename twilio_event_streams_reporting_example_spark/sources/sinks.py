@@ -15,13 +15,18 @@ The engine materializes three tables as parquet:
 
 At 100 TB the event log is the big table; date partitioning plus
 parquet min-max on the sid columns replaces the reference's LokiJS
-indices (SURVEY §4). Writes use dynamic partition overwrite so an
-incremental daily recompute replaces only the affected days.
+indices (SURVEY §4). The full recompute writes with dynamic partition
+overwrite. The incremental merge (``sources.incremental``) does not: it
+stages the touched fact partitions outside the table root and swaps each
+one in by rename, because dynamic overwrite only replaces dates that
+still have output rows — a date whose last affected row moved elsewhere
+would keep its stale row. ``sources.incremental.initialize_taskrouter``
+is the one materialization pass over all three tables.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -56,24 +61,3 @@ def write_agents(agents: DataFrame, path: str) -> None:
     """Current-state dimension: small, one file, broadcast at read time."""
     agents.coalesce(1).write.mode("overwrite").parquet(path)
 
-
-def materialize_taskrouter(spark: SparkSession, raw: DataFrame, base_dir: str) -> dict[str, str]:
-    """Full materialization pass: event log + fact + dimension.
-
-    Returns the written paths. The fact/dim recompute reads the same
-    parsed log the event-log sink wrote — one parse, three writes."""
-    from ..plans.taskrouter import (
-        ingest_taskrouter,
-        taskrouter_agents_df,
-        taskrouter_segments_df,
-    )
-
-    paths = {
-        "event_log": f"{base_dir}/event_log",
-        "segments": f"{base_dir}/segments",
-        "agents": f"{base_dir}/agents",
-    }
-    write_event_log(ingest_taskrouter(raw), paths["event_log"])
-    write_segments(taskrouter_segments_df(spark, raw), paths["segments"])
-    write_agents(taskrouter_agents_df(spark, raw), paths["agents"])
-    return paths
