@@ -69,7 +69,10 @@ def _sim():
 # Locally the same contract is one localCheckpoint per SparkSession
 # (keyed by applicationId so a fresh session rebuilds): the checkpoint
 # truncates lineage exactly like reading the parquet the sink wrote
-# (sources/sinks.py::write_segments), without a tempdir per query.
+# (sources/sinks.py::write_segments), without a tempdir per query. The
+# fixture fact is a few dozen rows, so it is stored as ONE partition: the
+# recompute's union of segment branches leaves it in ~18, and every
+# report query over it would schedule a task per partition per stage.
 _FACT_CACHE: dict[str, DataFrame] = {}
 
 
@@ -80,7 +83,7 @@ def _materialized(spark: SparkSession, what: str) -> DataFrame:
     df = _FACT_CACHE.get(key)
     if df is None:
         build = taskrouter_segments_df if what == "segments" else taskrouter_agents_df
-        df = build(spark, fixture_df(spark)).localCheckpoint(eager=True)
+        df = build(spark, fixture_df(spark)).coalesce(1).localCheckpoint(eager=True)
         _FACT_CACHE[key] = df
     return df
 
