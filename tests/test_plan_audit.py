@@ -178,27 +178,24 @@ def test_scan_checker_flags_live_unpruned_scan(spark, sf_dir):
 
 def test_committed_audit_streaming_section_is_clean_and_complete():
     """The streaming surface never runs in the batch bench, so the
-    audit plans every unstarted pipeline separately. Pin: all nine
+    audit plans every unstarted pipeline separately. Pin: all seven
     pipelines audited, zero violations, and exactly ONE stateful
     operator per plan — a second applyInPandasWithState/
     transformWithState node appearing in a lifecycle plan means the
     pipeline grew a hidden stateful stage (double state stores, double
     shuffles at 100 TB). The per-family node kind is pinned too: the
-    TWS variants must plan as TransformWithStateInPySpark, the classic
-    variants as FlatMapGroupsInPandasWithState, the built-in windowed
-    aggs as StateStoreSave (+ SessionWindowStateStoreSave for session
-    windows)."""
+    lifecycles must plan as FlatMapGroupsInPandasWithState, the built-in
+    windowed aggs as StateStoreSave (+ SessionWindowStateStoreSave for
+    session windows)."""
     art = _artifact()
     s = art["streaming"]
-    assert art["n_streaming"] == len(s) == 9
+    assert art["n_streaming"] == len(s) == 7
     expected_stateful = {
         "stream:segments_per_task": "FlatMapGroupsInPandasWithState",
         "stream:segments_bucketed": "FlatMapGroupsInPandasWithState",
         "stream:segments_wide": "FlatMapGroupsInPandasWithState",
         "stream:agent_status": "FlatMapGroupsInPandasWithState",
         "stream:agent_status_wide": "FlatMapGroupsInPandasWithState",
-        "stream:segments_tws": "TransformWithStateInPySpark",
-        "stream:segments_tws_bucketed": "TransformWithStateInPySpark",
         "stream:hourly_event_counts": "StateStoreSave",
         "stream:user_sessions": "SessionWindowStateStoreSave",
     }
@@ -209,15 +206,14 @@ def test_committed_audit_streaming_section_is_clean_and_complete():
         assert row["counts"]["BatchEvalPython"] == 0, name
         c = row["counts"]
         assert c[expected_stateful[name]] == 1, name
-        # exactly one custom stateful operator per lifecycle plan
+        # exactly one custom stateful operator per lifecycle plan; a
+        # transformWithState node counts too, so one that comes back in
+        # any plan is caught
         custom = (
             c["FlatMapGroupsInPandasWithState"]
             + c["TransformWithStateInPySpark"]
         )
-        if expected_stateful[name] in (
-            "FlatMapGroupsInPandasWithState",
-            "TransformWithStateInPySpark",
-        ):
+        if expected_stateful[name] == "FlatMapGroupsInPandasWithState":
             assert custom == 1, name
         else:
             assert custom == 0, name

@@ -262,33 +262,6 @@ def test_kafka_source_config(spark):
         assert {"event_id", "eventtype", "ts"} <= set(df.columns)
 
 
-def test_tws_lifecycle(spark, tmp_path):
-    """transformWithStateInPandas port of the lifecycle: same state
-    machine, same golden expectation as the applyInPandasWithState path.
-    The TWS Python state protocol needs google.protobuf; session.py
-    wires the vendored pure-Python runtime (tools/vendor/README.md)
-    when no real install exists, so this parity check EXECUTES here. If
-    neither is available the test still asserts the clean environment
-    failure rather than a hang."""
-    import pytest
-
-    from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
-        run_fixture_stream,
-    )
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        # TWS's Python state protocol is protobuf-based; without it the
-        # streaming query must fail (crashed driver worker), not hang
-        with pytest.raises(Exception, match="TransformWithState|STREAM_FAILED"):
-            run_fixture_stream(spark, str(tmp_path), tws=True)
-        return
-    got = run_fixture_stream(spark, str(tmp_path), tws=True)
-    base = run_fixture_stream(spark, str(tmp_path / "base"))
-    assert {tuple(r) for r in got.collect()} == {tuple(r) for r in base.collect()}
-
-
 def test_bucketed_lifecycle_matches_per_task(spark, tmp_path):
     """State-sharded lifecycle (one state doc per hash bucket of tasks,
     the throughput path) must emit EXACTLY the per-task variant's rows
@@ -489,28 +462,21 @@ def test_bucketed_lifecycle_hot_shard_fuzz(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "provider,buckets,tws",
+    "provider,buckets",
     [
-        (None, None, False),
+        (None, None),
         (
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
             None,
-            False,
         ),
         (
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
             8,
-            False,
-        ),
-        (
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-            8,
-            True,
         ),
     ],
-    ids=["hdfs-default", "rocksdb", "rocksdb-bucketed", "rocksdb-bucketed-tws"],
+    ids=["hdfs-default", "rocksdb", "rocksdb-bucketed"],
 )
-def test_streaming_restart_exactly_once(spark, provider, buckets, tws):
+def test_streaming_restart_exactly_once(spark, provider, buckets):
     """Failure-recovery contract: stop the streaming pipeline mid-fixture,
     then restart from the SAME checkpoint with the remaining files PLUS a
     redelivered copy of already-processed events. The stateful lifecycle,
@@ -525,11 +491,7 @@ def test_streaming_restart_exactly_once(spark, provider, buckets, tws):
     heap and checkpointed incrementally). The rocksdb-bucketed case
     restarts the STATE-SHARDED keying (multi-task state documents +
     min-deadline timer must both come back from the checkpoint) —
-    certifying the throughput path recovers exactly-once too. The
-    rocksdb-bucketed-tws case restarts the transformWithStateInPandas
-    MapState form of the same sharding (per-task map entries + the
-    deadline-index value state + the registered timer must all recover
-    from the RocksDB checkpoint)."""
+    certifying the throughput path recovers exactly-once too."""
     import json
     import os
     import shutil
@@ -553,9 +515,7 @@ def test_streaming_restart_exactly_once(spark, provider, buckets, tws):
             .option("maxFilesPerTrigger", 1)
             .load(indir)
         )
-        wide = wide_conversation_segments_stream(
-            parse_stream(raw), buckets=buckets, tws=tws
-        )
+        wide = wide_conversation_segments_stream(parse_stream(raw), buckets=buckets)
         q = write_segments_stream(wide, fact, ck).trigger(availableNow=True).start()
         q.awaitTermination(300)
 
@@ -877,91 +837,6 @@ def test_lifecycle_buckets_derivation():
     ) == LIFECYCLE_BUCKETS
 
 
-def test_tws_bucketed_lifecycle_matches_per_task(spark, tmp_path):
-    """The MapState-backed TWS bucketed lifecycle (per-task RocksDB
-    entries + a small deadline index, instead of one JSON blob per
-    shard) must emit EXACTLY the per-task variant's rows on the full
-    fixture — including the timeout-driven CORRUPTED conversations
-    (timer fire at min deadline + data-path reap of co-resident expired
-    tasks)."""
-    from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
-        run_fixture_stream,
-    )
-
-    got = run_fixture_stream(spark, str(tmp_path), buckets=8, tws=True).cache()
-    base = run_fixture_stream(spark, str(tmp_path / "base")).cache()
-    g = {tuple(r) for r in got.collect()}
-    b = {tuple(r) for r in base.collect()}
-    assert any("CORRUPTED" in str(r) for r in b)
-    assert g == b, (list(g - b)[:3], list(b - g)[:3])
-
-
-def test_tws_bucketed_coresident_expired_task_reaped(spark, tmp_path):
-    """The deterministic co-resident-expiry scenario (see the
-    applyInPandasWithState variant above) through the TWS MapState
-    keying: the expired task must be reaped from the data path while
-    its bucket keeps receiving other tasks' events, and the late event
-    must land on fresh state."""
-    import datetime as dt
-
-    from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
-        run_fixture_stream,
-    )
-
-    t0 = dt.datetime(2024, 7, 1, 8, 0, 0)
-    common = dict(task_queue_name="Q", task_queue_sid="WQ", workflow_name="WF",
-                  task_channel_unique_name="voice")
-    evs = [
-        _ce("RT", 1, "task-queue.entered", t0, task_sid="TA", **common),
-        _ce("RT", 2, "reservation.created", t0 + dt.timedelta(seconds=2),
-            task_sid="TA", reservation_sid="RA", worker_sid="W1", **common),
-        _ce("RT", 3, "reservation.accepted", t0 + dt.timedelta(seconds=10),
-            task_sid="TA", reservation_sid="RA", worker_sid="W1", **common),
-        _ce("RT", 4, "task-queue.entered", t0 + dt.timedelta(seconds=5),
-            task_sid="TB", **common),
-        _ce("RT", 5, "reservation.created", t0 + dt.timedelta(minutes=25),
-            task_sid="TB", reservation_sid="RB", worker_sid="W2", **common),
-        _ce("RT", 6, "reservation.accepted", t0 + dt.timedelta(minutes=26),
-            task_sid="TB", reservation_sid="RB", worker_sid="W2", **common),
-        _ce("RT", 7, "reservation.completed", t0 + dt.timedelta(minutes=30),
-            task_sid="TA", reservation_sid="RA", worker_sid="W1", **common),
-        _ce("RT", 8, "reservation.completed", t0 + dt.timedelta(minutes=31),
-            task_sid="TB", reservation_sid="RB", worker_sid="W2", **common),
-    ]
-    got = run_fixture_stream(
-        spark, str(tmp_path / "bkt"), files=len(evs), buckets=1, tws=True,
-        events_in=evs,
-    ).cache()
-    base = run_fixture_stream(
-        spark, str(tmp_path / "per"), files=len(evs), events_in=evs
-    ).cache()
-    g = {tuple(r) for r in got.collect()}
-    b = {tuple(r) for r in base.collect()}
-    assert any("CORRUPTED" in str(r) for r in b)
-    assert g == b, (list(g - b)[:4], list(b - g)[:4])
-
-
-def test_tws_bucketed_lifecycle_fuzz_parity(spark, tmp_path):
-    """Randomized scenario mix through the TWS MapState bucketed keying
-    vs per-task — set-equality of all emitted rows."""
-    from tests.test_fuzz_parity import _gen_events
-
-    from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
-        run_fixture_stream,
-    )
-
-    events = _gen_events(seed=4412, n_tasks=40)
-    got = run_fixture_stream(
-        spark, str(tmp_path / "bkt"), buckets=4, tws=True, events_in=events
-    ).cache()
-    base = run_fixture_stream(
-        spark, str(tmp_path / "per"), events_in=events
-    ).cache()
-    g = {tuple(r) for r in got.collect()}
-    b = {tuple(r) for r in base.collect()}
-    assert b and g == b, (len(g), len(b), list(g - b)[:3], list(b - g)[:3])
-
-
 def test_agent_status_idle_ttl_bounds_state(spark, tmp_path):
     """State-boundedness under worker churn: with idle_ttl armed, a
     worker whose open interval sits idle past the horizon has its state
@@ -1053,6 +928,41 @@ def test_agent_status_idle_ttl_bounds_state(spark, tmp_path):
     assert sum(1 for r in default if r["agent_uuid"] == "W2") == 1
 
 
+class FakeState:
+    """A GroupState stand-in for unit tests of the state functions. It
+    records the armed timeout and rejects one behind the watermark, the
+    rule of PySpark's own ``GroupState.setTimeoutTimestamp``."""
+
+    hasTimedOut = False
+
+    def __init__(self, watermark_ms):
+        self._wm = watermark_ms
+        self.armed = None
+        self.stored = None
+
+    @property
+    def exists(self):
+        return self.stored is not None
+
+    @property
+    def get(self):
+        return self.stored
+
+    def update(self, tup):
+        self.stored = tup
+
+    def remove(self):
+        self.stored = None
+
+    def getCurrentWatermarkMs(self):
+        return self._wm
+
+    def setTimeoutTimestamp(self, ts_ms):
+        if ts_ms < self._wm:
+            raise ValueError(f"timeout {ts_ms} < watermark {self._wm}")
+        self.armed = ts_ms
+
+
 def test_agent_status_idle_ttl_timeout_clamped_to_watermark():
     """A late worker event whose ts + idle_ttl is already at/behind the
     current watermark must re-arm at watermark+1 (Spark rejects past
@@ -1066,28 +976,6 @@ def test_agent_status_idle_ttl_timeout_clamped_to_watermark():
     from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
         _agent_status_fn_factory,
     )
-
-    class FakeState:
-        exists = False
-        hasTimedOut = False
-
-        def __init__(self, watermark_ms):
-            self._wm = watermark_ms
-            self.armed = None
-            self.stored = None
-
-        def update(self, tup):
-            self.stored = tup
-
-        def remove(self):
-            self.stored = None
-
-        def getCurrentWatermarkMs(self):
-            return self._wm
-
-        def setTimeoutTimestamp(self, ts_ms):
-            assert ts_ms > self._wm, "past timeout timestamp would throw in Spark"
-            self.armed = ts_ms
 
     # watermark is 3 days past the late event; idle_ttl=1h puts the
     # natural expiry far behind it
@@ -1122,6 +1010,50 @@ def test_agent_status_idle_ttl_timeout_clamped_to_watermark():
         * 1000
     )
     assert state2.armed == expected
+
+
+def test_bucketed_rearm_clamps_to_watermark_plus_one():
+    """A shard whose remaining min deadline EQUALS the current watermark
+    must re-arm at watermark+1, the rule the per-task and agent-status
+    functions follow: PySpark's GroupState.setTimeoutTimestamp rejects
+    only ts < watermark, so a deadline at the watermark would otherwise
+    be armed as is. A deadline ahead of the watermark arms unchanged."""
+    import datetime as dt
+    import json
+
+    import pandas as pd
+
+    from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
+        CONVERSATION_TIMEOUT,
+        _bucket_lifecycle_fn,
+    )
+
+    def ms(t):
+        return int(t.replace(tzinfo=dt.timezone.utc).timestamp() * 1000)
+
+    t0 = dt.datetime(2024, 7, 1, 8, 0, 0)
+    # two co-resident tasks open in one shard; TA's deadline is the min
+    pdf = pd.DataFrame(
+        {
+            "eventtype": ["task-queue.entered", "task-queue.entered"],
+            "ts": [pd.Timestamp(t0), pd.Timestamp(t0 + dt.timedelta(minutes=1))],
+            "task_sid": ["TA", "TB"],
+            "reservation_sid": [None, None],
+            "worker_sid": [None, None],
+            "value": ["raw-a", "raw-b"],
+            "event_id": ["E1", "E2"],
+        }
+    )
+    min_deadline = ms(t0 + CONVERSATION_TIMEOUT)
+
+    at_wm = FakeState(min_deadline)
+    assert list(_bucket_lifecycle_fn((0,), iter([pdf]), at_wm)) == []
+    assert sorted(json.loads(at_wm.stored[0])["t"]) == ["TA", "TB"]
+    assert at_wm.armed == min_deadline + 1
+
+    ahead = FakeState(min_deadline - 60_000)
+    list(_bucket_lifecycle_fn((0,), iter([pdf]), ahead))
+    assert ahead.armed == min_deadline
 
 
 def test_agent_status_machine_pure_fn_replay():
@@ -1159,11 +1091,11 @@ def test_keying_parity_under_cross_batch_disorder(spark, tmp_path, seed):
     """Delivery order shuffled ACROSS micro-batches (not just within):
     some events arrive late relative to the watermark and are dropped,
     others land in earlier/later batches than event-time order would
-    place them. Whatever the resulting emission set is, all three state
-    keyings — per-task, bucketed blob, bucketed TWS MapState — must
-    produce it identically (same files -> same batches -> same watermark
-    trajectory -> same drops), so the keying remains a pure plan knob
-    even under disordered transport."""
+    place them. Whatever the resulting emission set is, both state
+    keyings — per-task and bucketed — must produce it identically
+    (same files -> same batches -> same watermark trajectory -> same
+    drops), so the keying remains a pure plan knob even under
+    disordered transport."""
     import random
 
     from tests.test_fuzz_parity import _gen_events
@@ -1180,18 +1112,10 @@ def test_keying_parity_under_cross_batch_disorder(spark, tmp_path, seed):
     bkt = run_fixture_stream(
         spark, str(tmp_path / "bkt"), buckets=4, events_in=events, keep_order=True
     ).cache()
-    tws_b = run_fixture_stream(
-        spark, str(tmp_path / "twsb"), buckets=4, tws=True, events_in=events,
-        keep_order=True,
-    ).cache()
-    tws_p = run_fixture_stream(
-        spark, str(tmp_path / "twsp"), tws=True, events_in=events, keep_order=True
-    ).cache()
     b = {tuple(r) for r in base.collect()}
     assert b, "disordered spool must still emit rows"
-    for name, df in (("bucketed", bkt), ("tws-bucketed", tws_b), ("tws-per-task", tws_p)):
-        g = {tuple(r) for r in df.collect()}
-        assert g == b, (name, len(g), len(b), list(g - b)[:3], list(b - g)[:3])
+    g = {tuple(r) for r in bkt.collect()}
+    assert g == b, (len(g), len(b), list(g - b)[:3], list(b - g)[:3])
 
 
 def test_scale_stream_summary_matches_closed_form(spark, tmp_path):

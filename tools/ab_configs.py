@@ -21,7 +21,6 @@ import json, os, sys, time
 sys.path.insert(0, %(repo)r)
 extra = json.loads(sys.argv[1])
 names = json.loads(sys.argv[2])
-import twilio_event_streams_reporting_example_spark.session as sess
 from pyspark.sql import SparkSession
 orig_builder_cfg = dict()
 _real = SparkSession.builder.config
@@ -31,7 +30,6 @@ from twilio_event_streams_reporting_example_spark.session import get_spark as _g
 def get_spark(app="ab", shuffle_partitions=None):
     s = None
     # replicate session.get_spark but with extra confs
-    sess._ensure_protobuf_path()
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sp = shuffle_partitions if shuffle_partitions is not None else cpus
     b = (SparkSession.builder.master(f"local[{cpus}]").appName(app)

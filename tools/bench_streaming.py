@@ -52,8 +52,7 @@ def spool_sparse_touch(spark, outdir: str, n_dormant: int, n_active: int,
     the remaining batches. Every micro-batch touches nearly
     every shard, but only the active tasks' state changes — the
     shape where the blob shard re-serializes all co-resident
-    dormant fat state per batch and MapState rewrites only the
-    touched entries. Returns total event count."""
+    dormant fat state per batch. Returns total event count."""
     from pyspark.sql import functions as F
 
     from twilio_event_streams_reporting_example_spark.session import (
@@ -160,6 +159,7 @@ def spool_sparse_touch(spark, outdir: str, n_dormant: int, n_active: int,
 def main() -> int:
     from twilio_event_streams_reporting_example_spark.session import get_spark
     from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
+        LIFECYCLE_BUCKETS,
         conversation_segments_stream,
         hourly_event_counts_stream,
         parse_stream,
@@ -373,59 +373,21 @@ def main() -> int:
         run("lifecycle", conversation_segments_stream)
         run(
             "lifecycle_bucketed",
-            lambda ev: conversation_segments_stream(ev, buckets=1024),
+            lambda ev: conversation_segments_stream(ev, buckets=LIFECYCLE_BUCKETS),
             lag_probe=True,
         )
-        # same bucket keying on transformWithStateInPandas with per-task
-        # MapState (RocksDB rewrites only touched tasks, not the shard
-        # blob) — TWS requires the RocksDB state store provider
-        provider_key = "spark.sql.streaming.stateStore.providerClass"
-        prev_provider = spark.conf.get(provider_key, None)
-        try:
-            spark.conf.set(
-                provider_key,
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            )
-            run(
-                "lifecycle_bucketed_tws",
-                lambda ev: conversation_segments_stream(ev, buckets=1024, tws=True),
-            )
-        finally:
-            if prev_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev_provider)
         # sparse-touch: dormant fat state + active minority per batch —
-        # the shape where per-entry MapState beats the whole-shard blob
+        # the shape where the whole-shard blob rewrites the most state
         sp_dormant = int(os.environ.get("SPARK_GRAFT_SPARSE_DORMANT", "50000"))
         sp_active = int(os.environ.get("SPARK_GRAFT_SPARSE_ACTIVE", "10000"))
         sp_dir = os.path.join(work, "sparse_in")
         sp_events = spool_sparse_touch(spark, sp_dir, sp_dormant, sp_active, 20)
         run_sparse(
             "lifecycle_sparse_touch",
-            lambda ev: conversation_segments_stream(ev, buckets=1024),
+            lambda ev: conversation_segments_stream(ev, buckets=LIFECYCLE_BUCKETS),
             sp_dir,
             sp_events,
         )
-        prev_provider = spark.conf.get(provider_key, None)
-        try:
-            spark.conf.set(
-                provider_key,
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            )
-            run_sparse(
-                "lifecycle_sparse_touch_tws",
-                lambda ev: conversation_segments_stream(ev, buckets=1024, tws=True),
-                sp_dir,
-                sp_events,
-            )
-        finally:
-            if prev_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev_provider)
         run("hourly_window", hourly_event_counts_stream, lag_probe=True)
 
         # The round-15 streaming scale CERTIFICATE path, measured: the

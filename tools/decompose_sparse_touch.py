@@ -18,7 +18,7 @@ fixed cost separates into:
                    isolated (same touched-shard pattern, ~60-byte task
                    entries instead of ~2 KB).
   full             the recorded profile (50k dormant @2KB, 10k active,
-                   buckets=1024).
+                   LIFECYCLE_BUCKETS = 1024 shards).
   buckets128       full profile, 128 shards: more co-resident tasks
                    per blob but 8x fewer touched groups per batch.
 
@@ -63,8 +63,8 @@ def _pct(xs, f):
 def _batch_breakdown(q) -> dict:
     """p50/p95 of every durationMs component and, PER STATE OPERATOR
     (the lifecycle pipelines carry two: parse_stream's
-    dropDuplicatesWithinWatermark and the applyInPandasWithState /
-    transformWithState lifecycle), the commit/row/memory stats —
+    dropDuplicatesWithinWatermark and the applyInPandasWithState
+    lifecycle), the commit/row/memory stats —
     keyed by the operator's reported name."""
     durs: dict[str, list[float]] = {k: [] for k in _DUR_KEYS}
     st: dict[str, dict[str, list[float]]] = {}
@@ -100,6 +100,7 @@ def main() -> int:
 
     from twilio_event_streams_reporting_example_spark.session import get_spark
     from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
+        LIFECYCLE_BUCKETS,
         conversation_segments_stream,
         parse_stream,
     )
@@ -172,7 +173,7 @@ def main() -> int:
         run(
             "no_dormant",
             lambda ev: conversation_segments_stream(
-                parse_stream(ev), buckets=1024
+                parse_stream(ev), buckets=LIFECYCLE_BUCKETS
             ),
             nod_dir,
             n_nod,
@@ -180,7 +181,7 @@ def main() -> int:
         run(
             "lean_pad0",
             lambda ev: conversation_segments_stream(
-                parse_stream(ev), buckets=1024
+                parse_stream(ev), buckets=LIFECYCLE_BUCKETS
             ),
             lean_dir,
             n_lean,
@@ -188,7 +189,7 @@ def main() -> int:
         run(
             "full",
             lambda ev: conversation_segments_stream(
-                parse_stream(ev), buckets=1024
+                parse_stream(ev), buckets=LIFECYCLE_BUCKETS
             ),
             full_dir,
             n_full,
@@ -213,7 +214,7 @@ def main() -> int:
         t0 = time.perf_counter()
         q = (
             conversation_segments_stream(
-                parse_stream(one_batch_source(full_dir)), buckets=1024
+                parse_stream(one_batch_source(full_dir)), buckets=LIFECYCLE_BUCKETS
             )
             .writeStream.format("noop")
             .option("checkpointLocation", ckpt)
@@ -239,7 +240,7 @@ def main() -> int:
             run(
                 "state_partitions8",
                 lambda ev: conversation_segments_stream(
-                    parse_stream(ev), buckets=1024
+                    parse_stream(ev), buckets=LIFECYCLE_BUCKETS
                 ),
                 full_dir,
                 n_full,

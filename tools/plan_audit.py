@@ -353,10 +353,6 @@ def streaming_plans(spark) -> dict[str, str]:
         "stream:segments_bucketed": lambda: segment_emissions_stream(
             ev, buckets=8
         ),
-        "stream:segments_tws": lambda: segment_emissions_stream(ev, tws=True),
-        "stream:segments_tws_bucketed": lambda: segment_emissions_stream(
-            ev, tws=True, buckets=8
-        ),
         "stream:segments_wide": lambda: wide_conversation_segments_stream(ev),
         "stream:agent_status": lambda: agent_status_emissions_stream(ev),
         "stream:agent_status_wide": lambda: wide_agent_status_stream(ev),

@@ -8,34 +8,8 @@ exception of shuffle partitions which scale with cluster cores / input size.
 from __future__ import annotations
 
 import os
-import sys
 
 from pyspark.sql import SparkSession
-
-
-def _ensure_protobuf_path() -> None:
-    """Make the vendored pure-Python protobuf runtime importable when no
-    real protobuf install exists (tools/vendor/README.md): pyspark's
-    transformWithStateInPandas state protocol needs google.protobuf on
-    the driver AND python workers, so the path must land in PYTHONPATH
-    BEFORE the JVM (and hence the python workers it spawns) starts. A
-    deployment that ships protobuf normally never touches the vendor."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return
-    except ImportError:
-        pass
-    vendor = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools", "vendor"
-    )
-    if not os.path.isdir(os.path.join(vendor, "google", "protobuf")):
-        return
-    if vendor not in sys.path:
-        sys.path.insert(0, vendor)
-    pp = os.environ.get("PYTHONPATH", "")
-    if vendor not in pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (pp + os.pathsep + vendor) if pp else vendor
 
 
 def scale_input_partitions(spark: "SparkSession") -> int:
@@ -73,7 +47,6 @@ def get_spark(
         be sized so each task reads 100-200 MB of shuffle data (AQE coalesce
         makes the exact number less critical as long as it's not too low).
     """
-    _ensure_protobuf_path()
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
         shuffle_partitions = cpus

@@ -34,14 +34,10 @@ This is the documented Pandas-UDF path (custom operator tier (b)):
 the per-key sequential state machine is genuinely order-dependent
 imperative logic that built-in operators can't express.
 
-Two stateful APIs, one state machine: ``_lifecycle_fn`` runs it under
-``applyInPandasWithState`` (the certified default) and
-``ConversationLifecycle`` under Spark 4's ``transformWithStateInPandas``
-(named state + explicit timers on RocksDB — the successor API). The
-TWS runtime speaks protobuf to its Python state server; environments
-without ``google.protobuf`` (this container) can build the query but
-not run it, so the TWS path is environment-gated in tests, exactly
-like the Kafka connector.
+One state machine, two keyings, both under ``applyInPandasWithState``:
+``_lifecycle_fn`` keys state by task (the reference every parity test
+compares against), and ``_bucket_lifecycle_fn`` shards tasks over hash
+buckets (``buckets=N``; the throughput path a deployment runs).
 """
 
 from __future__ import annotations
@@ -54,12 +50,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    ExpiredTimerInfo,
-    StatefulProcessor,
-    StatefulProcessorHandle,
-    TimerValues,
-)
 from pyspark.sql import types as T
 
 from ..taskrouter import schema as S
@@ -352,7 +342,7 @@ def _lifecycle_fn(
             # deadline already at/behind the watermark — Spark rejects
             # past timeout timestamps, so clamp to watermark+1 and let
             # the timeout fire next micro-batch (the same re-arm rule
-            # the bucketed keyings use; found by the cross-batch
+            # the bucketed keying uses; found by the cross-batch
             # disorder fuzz)
             deadline = _deadline_ms(st)
             wm = state.getCurrentWatermarkMs()
@@ -582,213 +572,11 @@ def _bucket_lifecycle_fn(
     if tasks:
         state.update((json.dumps(st),))
         nxt = min(_deadline_ms(t) for t in tasks.values())
-        try:
-            state.setTimeoutTimestamp(nxt)
-        except Exception:
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
+        state.setTimeoutTimestamp(max(nxt, state.getCurrentWatermarkMs() + 1))
     elif state.exists:
         state.remove()
     if rows:
         yield pd.DataFrame(rows, columns=[f.name for f in EMIT_SCHEMA.fields])
-
-
-class ConversationLifecycle(StatefulProcessor):
-    """The same lifecycle through Spark 4's transformWithStateInPandas —
-    the successor stateful API (explicit timers, named state variables,
-    TTL support). The state machine itself (`_segment_rows_for_task`),
-    the emit schema, and the deterministic sort are SHARED with the
-    applyInPandasWithState path; only the state/timer plumbing differs,
-    and both paths must match the same golden oracle.
-
-    Timer discipline: TWS timers are multi-shot per key (registerTimer
-    ADDS one), unlike GroupState's single overwritten timeout — so the
-    current deadline is kept in the state document and the stale timer
-    is deleted before registering the new one; a fired timer for a
-    since-cleared key is a no-op. Two further rules align TWS firing
-    with GroupState's semantics (both found by the cross-batch disorder
-    fuzz): (1) the registered timestamp is clamped to watermark+1 when a
-    LATE event's deadline is already at/behind the watermark, and (2) a
-    fired timer is ignored when the key ALSO received data in the same
-    micro-batch — under applyInPandasWithState data arrival cancels the
-    pending timeout for that batch, whereas TWS runs both callbacks, so
-    without the guard the TWS keying emits spurious CORRUPTED rows. The
-    data batch is detected by the watermark recorded at the last
-    handleInputRows: equal watermark => same micro-batch (and if the
-    watermark did not advance between batches, the re-registered timer
-    sits at watermark+1 and cannot have fired — so the check is exact,
-    not heuristic)."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._handle = handle
-        self._state = handle.getValueState("task_state", STATE_SCHEMA)
-
-    def _load(self) -> dict:
-        return json.loads(self._state.get()[0]) if self._state.exists() else {}
-
-    def handleInputRows(
-        self, key: Any, rows: Iterator[pd.DataFrame], timerValues: TimerValues
-    ) -> Iterator[pd.DataFrame]:
-        st = self._load()
-        prev_deadline = st.pop("_deadline_ms", None)
-        st.pop("_wm_seen", None)
-        events = _events_from_pdfs(rows)
-        out, st, has_open = _segment_rows_for_task(events, st, timed_out=False)
-        wm = timerValues.getCurrentWatermarkInMs()
-        if has_open:
-            deadline = max(_deadline_ms(st), wm + 1)
-            if prev_deadline is not None and prev_deadline != deadline:
-                self._handle.deleteTimer(prev_deadline)
-            if prev_deadline != deadline:
-                self._handle.registerTimer(deadline)
-            st["_deadline_ms"] = deadline
-            st["_wm_seen"] = wm
-            self._state.update((json.dumps(st),))
-        else:
-            if prev_deadline is not None:
-                self._handle.deleteTimer(prev_deadline)
-            self._state.clear()
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in EMIT_SCHEMA.fields])
-
-    def handleExpiredTimer(
-        self, key: Any, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-    ) -> Iterator[pd.DataFrame]:
-        st = self._load()
-        if not st:  # key already resolved; stale timer
-            return
-        if st.get("_wm_seen") == timerValues.getCurrentWatermarkInMs():
-            # data arrived for this key in the SAME micro-batch: under
-            # GroupState semantics that cancels the timeout — the data
-            # path already re-armed the (clamped) timer
-            return
-        st.pop("_deadline_ms", None)
-        st.pop("_wm_seen", None)
-        out, st, _ = _segment_rows_for_task([], st, timed_out=True)
-        self._state.clear()
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in EMIT_SCHEMA.fields])
-
-    def close(self) -> None:
-        pass
-
-
-class BucketedConversationLifecycle(StatefulProcessor):
-    """The state-sharded lifecycle on transformWithStateInPandas with
-    PER-TASK MapState — the structural fix for the applyInPandasWithState
-    shard's one-JSON-blob-per-bucket design (there, every touched shard
-    re-serializes ALL its open tasks each micro-batch; here RocksDB
-    rewrites only the touched tasks' map entries).
-
-    State per bucket key:
-      - ``tasks``: MapState task_sid → state JSON (one RocksDB entry per
-        open task; update cost O(touched tasks), not O(open tasks));
-      - ``deadline_index``: ValueState holding {task_sid → deadline_ms}
-        plus the currently-registered timer — a deliberately small
-        rewritten-per-batch summary (8-byte deadline per open task vs
-        the full anchors document) that makes the expiry scan O(open
-        tasks in-memory dict) instead of an O(open tasks) RocksDB
-        iterate-and-parse per batch.
-
-    Timeout parity is the same predicate as every other keying: a task
-    expires when ITS deadline is at/behind the current watermark,
-    checked both on timer fire and — for co-resident tasks with no data
-    this batch — in the data path (the reap the per-task keying gets
-    from Spark firing each key separately). Timers are multi-shot: the
-    stale timer is deleted before re-registering at the new min
-    deadline, and a fired timer for a cleared bucket is a no-op."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._handle = handle
-        self._tasks = handle.getMapState("tasks", "task_sid string", STATE_SCHEMA)
-        self._index = handle.getValueState("deadline_index", STATE_SCHEMA)
-
-    def _load_index(self) -> dict:
-        if self._index.exists():
-            return json.loads(self._index.get()[0])
-        return {"d": {}, "t": None}
-
-    def _reap(self, idx: dict, wm: int, skip: set) -> list[dict]:
-        rows: list[dict] = []
-        for sid in [s for s, dl in idx["d"].items() if s not in skip and dl <= wm]:
-            st = json.loads(self._tasks.getValue((sid,))[0])
-            out, _, _ = _segment_rows_for_task([], st, timed_out=True)
-            rows.extend(out)
-            self._tasks.removeKey((sid,))
-            del idx["d"][sid]
-        return rows
-
-    def _sync(self, idx: dict, wm: int) -> None:
-        prev = idx.get("t")
-        if idx["d"]:
-            nxt = min(idx["d"].values())
-            if nxt <= wm:
-                # min deadline already at/behind the watermark: re-arm
-                # just past it and reap next micro-batch (the per-task
-                # scheme's own earliest-firing semantics)
-                nxt = wm + 1
-            if prev != nxt:
-                if prev is not None:
-                    self._handle.deleteTimer(prev)
-                self._handle.registerTimer(nxt)
-            idx["t"] = nxt
-            self._index.update((json.dumps(idx),))
-        else:
-            if prev is not None:
-                self._handle.deleteTimer(prev)
-            self._index.clear()
-
-    def handleInputRows(
-        self, key: Any, rows: Iterator[pd.DataFrame], timerValues: TimerValues
-    ) -> Iterator[pd.DataFrame]:
-        idx = self._load_index()
-        wm = timerValues.getCurrentWatermarkInMs()
-        idx["w"] = wm  # same-batch marker for handleExpiredTimer
-        by_task: dict[str, list] = {}
-        for ev in _events_from_pdfs(rows):
-            by_task.setdefault(ev["task_sid"], []).append(ev)
-        out = self._reap(idx, wm, set(by_task))
-        for sid, evs in by_task.items():
-            cur = (
-                json.loads(self._tasks.getValue((sid,))[0])
-                if self._tasks.containsKey((sid,))
-                else {}
-            )
-            r, st, has_open = _segment_rows_for_task(evs, cur, timed_out=False)
-            out.extend(r)
-            if has_open:
-                self._tasks.updateValue((sid,), (json.dumps(st),))
-                idx["d"][sid] = _deadline_ms(st)
-            else:
-                if self._tasks.containsKey((sid,)):
-                    self._tasks.removeKey((sid,))
-                idx["d"].pop(sid, None)
-        self._sync(idx, wm)
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in EMIT_SCHEMA.fields])
-
-    def handleExpiredTimer(
-        self, key: Any, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-    ) -> Iterator[pd.DataFrame]:
-        idx = self._load_index()
-        if not idx["d"]:  # bucket already resolved; stale timer
-            return
-        wm = timerValues.getCurrentWatermarkInMs()
-        if idx.get("w") == wm:
-            # the bucket also received data this micro-batch: the data
-            # path already reaped every dataless-expired task and
-            # re-armed the (clamped) timer — a same-batch firing must
-            # not reap tasks the data path just touched (GroupState
-            # cancels the timeout on data arrival; TWS runs both
-            # callbacks — same guard as the per-task TWS class)
-            return
-        idx["t"] = None  # the fired timer is consumed
-        out = self._reap(idx, wm, set())
-        self._sync(idx, wm)
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in EMIT_SCHEMA.fields])
-
-    def close(self) -> None:
-        pass
 
 
 def parse_stream(raw: DataFrame) -> DataFrame:
@@ -828,12 +616,10 @@ def parse_stream(raw: DataFrame) -> DataFrame:
 
 
 def segment_emissions_stream(
-    events: DataFrame, tws: bool = False, buckets: int | None = None
+    events: DataFrame, buckets: int | None = None
 ) -> DataFrame:
     """The stateful conversation lifecycle over a parsed event stream —
-    narrow (branch, kind, carrier, overrides) emissions. ``tws=True``
-    runs the transformWithStateInPandas implementation instead of
-    applyInPandasWithState; both share the state machine and oracle.
+    narrow (branch, kind, carrier, overrides) emissions.
     ``buckets=N`` shards state over N hash buckets of tasks instead of
     one group per task (same emissions; the throughput path — see
     ``_bucket_lifecycle_fn``)."""
@@ -844,15 +630,6 @@ def segment_emissions_stream(
         keyed = filtered.withColumn(
             "bucket", F.pmod(F.xxhash64("task_sid"), F.lit(buckets))
         ).groupBy("bucket")
-        if tws:
-            # per-task MapState: RocksDB rewrites only touched tasks,
-            # not the whole shard document (BucketedConversationLifecycle)
-            return keyed.transformWithStateInPandas(
-                BucketedConversationLifecycle(),
-                EMIT_SCHEMA,
-                "Append",
-                "EventTime",
-            )
         return keyed.applyInPandasWithState(
             _bucket_lifecycle_fn,
             EMIT_SCHEMA,
@@ -860,15 +637,7 @@ def segment_emissions_stream(
             "append",
             GroupStateTimeout.EventTimeTimeout,
         )
-    keyed = filtered.groupBy("task_sid")
-    if tws:
-        return keyed.transformWithStateInPandas(
-            ConversationLifecycle(),
-            EMIT_SCHEMA,
-            "Append",
-            "EventTime",
-        )
-    return keyed.applyInPandasWithState(
+    return filtered.groupBy("task_sid").applyInPandasWithState(
         _lifecycle_fn,
         EMIT_SCHEMA,
         STATE_SCHEMA,
@@ -878,16 +647,14 @@ def segment_emissions_stream(
 
 
 def wide_conversation_segments_stream(
-    events: DataFrame, tws: bool = False, buckets: int | None = None
+    events: DataFrame, buckets: int | None = None
 ) -> DataFrame:
     """S5 in streaming form: the full ~65-column conversations fact as an
     append stream — the stateless shared wide projection over the state
     machine's emissions."""
     from ..plans.taskrouter import wide_project_stream
 
-    return wide_project_stream(
-        segment_emissions_stream(events, tws=tws, buckets=buckets)
-    )
+    return wide_project_stream(segment_emissions_stream(events, buckets=buckets))
 
 
 def wide_agent_status_stream(events: DataFrame) -> DataFrame:
@@ -910,14 +677,14 @@ def wide_agent_status_stream(events: DataFrame) -> DataFrame:
 
 
 def conversation_segments_stream(
-    events: DataFrame, tws: bool = False, buckets: int | None = None
+    events: DataFrame, buckets: int | None = None
 ) -> DataFrame:
     """The original core (ids + measures) streaming surface — a column
     subset of the wide stream; Catalyst prunes the unused wide
     expressions, so nothing extra is computed."""
-    return wide_conversation_segments_stream(
-        events, tws=tws, buckets=buckets
-    ).select(*CORE_COLUMNS)
+    return wide_conversation_segments_stream(events, buckets=buckets).select(
+        *CORE_COLUMNS
+    )
 
 
 def write_event_log(events: DataFrame, path: str, checkpoint: str):
@@ -955,7 +722,6 @@ def run_fixture_stream(
     workdir: str,
     files: int = 6,
     wide: bool = False,
-    tws: bool = False,
     buckets: int | None = None,
     events_in: list | None = None,
     agent: bool = False,
@@ -1006,62 +772,43 @@ def run_fixture_stream(
     )
     events = parse_stream(raw)
     seg = (
-        wide_conversation_segments_stream(events, tws=tws, buckets=buckets)
+        wide_conversation_segments_stream(events, buckets=buckets)
         if wide
-        else conversation_segments_stream(events, tws=tws, buckets=buckets)
+        else conversation_segments_stream(events, buckets=buckets)
     )
     name = "tr_stream_segments_wide" if wide else "tr_stream_segments"
     if agent:
         name += "_agent"
     if buckets:
         name += "_bucketed"
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    try:
-        if tws:
-            name += "_tws"
-            # transformWithState runs only on the RocksDB state store (the
-            # provider that gives it column families for named state + timers)
-            spark.conf.set(
-                provider_key,
-                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-            )
-        q = (
-            seg.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
+    q = (
+        seg.writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    if agent:
+        # the agent-status lifecycle is its OWN streaming query over
+        # the same source (Spark allows one applyInPandasWithState
+        # per query; a deployment runs the two lifecycles as
+        # independent jobs with independent checkpoints/state stores
+        # — the standard multi-consumer topology). Results union
+        # AFTER completion, both sides batch DataFrames by then.
+        aseg = wide_agent_status_stream(parse_stream(raw))
+        if not wide:
+            aseg = aseg.select(*CORE_COLUMNS)
+        aq = (
+            aseg.writeStream.format("memory")
+            .queryName(name + "_astatus")
+            .option("checkpointLocation", os.path.join(workdir, "ckpt_agent"))
             .outputMode("append")
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
-        if agent:
-            # the agent-status lifecycle is its OWN streaming query over
-            # the same source (Spark allows one applyInPandasWithState
-            # per query; a deployment runs the two lifecycles as
-            # independent jobs with independent checkpoints/state stores
-            # — the standard multi-consumer topology). Results union
-            # AFTER completion, both sides batch DataFrames by then.
-            aseg = wide_agent_status_stream(parse_stream(raw))
-            if not wide:
-                aseg = aseg.select(*CORE_COLUMNS)
-            aq = (
-                aseg.writeStream.format("memory")
-                .queryName(name + "_astatus")
-                .option("checkpointLocation", os.path.join(workdir, "ckpt_agent"))
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            aq.awaitTermination(300)
-    finally:
-        # restore the shared session's provider: later stateful queries in
-        # the same session must run on the provider they were certified on
-        if tws:
-            if prev_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev_provider)
+        aq.awaitTermination(300)
     out = spark.sql(f"SELECT * FROM {name}")
     if agent:
         out = out.unionByName(spark.sql(f"SELECT * FROM {name}_astatus"))
