@@ -1,9 +1,11 @@
 """Interleaved same-session-less A/B of session configs over a query subset.
 
 Window drift on this box is 1.5-2x within an hour, so config A/Bs must
-interleave: for each config variant we spawn a fresh session (configs are
-session-wide), run the subset, tear down, and CYCLE A/B/A/B so both
-variants sample the same windows. Reports per-variant per-cycle totals.
+interleave: for each config variant we spawn a fresh package session
+(``session.get_spark``), set the variant's confs on it, run the subset, tear
+down, and CYCLE A/B/A/B so both variants sample the same windows. Only
+runtime-modifiable SQL confs can vary; any other conf fails the variant.
+Reports per-variant per-cycle totals.
 
 Usage: python tools/ab_configs.py '<json_conf_a>' '<json_conf_b>' q1 q2 ...
 """
@@ -21,33 +23,13 @@ import json, os, sys, time
 sys.path.insert(0, %(repo)r)
 extra = json.loads(sys.argv[1])
 names = json.loads(sys.argv[2])
-from pyspark.sql import SparkSession
-orig_builder_cfg = dict()
-_real = SparkSession.builder.config
-# inject extra confs by monkeypatching get_spark's builder via conf defaults
-import pyspark
-from twilio_event_streams_reporting_example_spark.session import get_spark as _gs
-def get_spark(app="ab", shuffle_partitions=None):
-    s = None
-    # replicate session.get_spark but with extra confs
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    sp = shuffle_partitions if shuffle_partitions is not None else cpus
-    b = (SparkSession.builder.master(f"local[{cpus}]").appName(app)
-        .config("spark.sql.shuffle.partitions", str(sp))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN"))
-    for k, v in extra.items():
-        b = b.config(k, v)
-    s = b.getOrCreate(); s.sparkContext.setLogLevel("WARN"); return s
-spark = get_spark()
+from twilio_event_streams_reporting_example_spark.session import get_spark
+spark = get_spark("ab")
+for k, v in extra.items():
+    # a static or unknown conf would be ignored at runtime: fail the variant
+    if not spark.conf.isModifiable(k):
+        sys.exit(f"conf {k} cannot be changed at runtime")
+    spark.conf.set(k, v)
 from twilio_event_streams_reporting_example_spark.registry import all_queries, release_caches
 def force(df): df.write.format("noop").mode("overwrite").save()
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -73,10 +55,10 @@ def run_variant(conf: dict, names: list) -> dict:
         capture_output=True, text=True, cwd=REPO, timeout=1800,
     )
     for line in r.stdout.splitlines():
-        if line.startswith("ABRESULT "):
+        if r.returncode == 0 and line.startswith("ABRESULT "):
             return json.loads(line[len("ABRESULT "):])
     print(r.stdout[-2000:], r.stderr[-2000:], file=sys.stderr)
-    raise RuntimeError("no result")
+    raise RuntimeError(f"variant {conf} failed (exit {r.returncode})")
 
 
 def main():

@@ -3,13 +3,53 @@
 Local test default is ``local[$SPARK_GRAFT_CPUS]`` (driver-only JVM); the
 same configs are what we would set on a 1000-executor cluster, with the
 exception of shuffle partitions which scale with cluster cores / input size.
+
+Python workers run ``worker_daemon`` instead of the stock ``pyspark.daemon``.
+Spark puts ``pyspark.zip``, the py4j zip and the spark-core jar ahead of
+``PYTHONPATH`` on every worker's ``sys.path``, and each task's runner calls
+``importlib.invalidate_caches()``, which on CPython 3.11 re-reads every
+archive's central directory: 0.17-0.5 s per runner, about two runners per
+stateful micro-batch. The daemon drops the archives before pyspark is
+imported, so its workers load the installed pyspark the driver uses and the
+call costs well under a millisecond. Two fallbacks keep the stock
+behaviour:
+
+- The daemon keeps Spark's path when ``pyspark`` or ``py4j`` does not
+  resolve without the archives, or when the pyspark that does resolve has
+  a different ``__version__`` from the archive's copy.
+- ``get_spark`` selects the daemon only when the workers can import this
+  package, that is when the package root is the JVM's working directory or
+  on its ``PYTHONPATH``. Otherwise the stock daemon stays, so pandas UDFs
+  still start and ``registry._ensure_worker_imports`` can ship the package
+  with ``addPyFile``.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+WORKER_DAEMON = f"{__package__}.worker_daemon"
+
+
+def workers_import_package(cwd: str, pythonpath: str) -> bool:
+    """Whether Python workers started in ``cwd`` with ``PYTHONPATH`` set to
+    ``pythonpath`` can import this package."""
+    root = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+    entries = [cwd, *pythonpath.split(os.pathsep)]
+    return any(e and os.path.realpath(e) == root for e in entries)
+
+
+def _worker_cwd_and_pythonpath() -> tuple[str, str]:
+    """The running JVM's working directory and ``PYTHONPATH``, or this
+    process's, which the JVM that ``get_spark`` launches inherits."""
+    jvm = SparkContext._jvm
+    if jvm is None:
+        return os.getcwd(), os.environ.get("PYTHONPATH", "")
+    system = jvm.java.lang.System
+    return system.getProperty("user.dir"), system.getenv("PYTHONPATH") or ""
 
 
 def scale_input_partitions(spark: "SparkSession") -> int:
@@ -75,6 +115,8 @@ def get_spark(
         # last-wins (routes/events.js:353-356 in the reference).
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
     )
+    if workers_import_package(*_worker_cwd_and_pythonpath()):
+        builder = builder.config("spark.python.daemon.module", WORKER_DAEMON)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
