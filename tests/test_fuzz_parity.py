@@ -341,7 +341,7 @@ def test_streaming_wide_matches_batch_on_random_scenarios(spark, seed):
     batch recompute on every terminal segment — ALL ~65 columns, custom
     measures included (the wide path re-parses the carrier CloudEvent, so
     custom overrides surface exactly as in batch). Events are
-    deduplicated by CloudEvent id first (parse_stream's job) and sorted
+    deduplicated by CloudEvent id first (the lifecycle state's job) and sorted
     with the (ts, arrival_idx) tiebreak the in-batch sort applies."""
     from twilio_event_streams_reporting_example_spark.plans.taskrouter import (
         taskrouter_segments_df,
@@ -386,7 +386,7 @@ def test_streaming_wide_matches_batch_on_random_scenarios(spark, seed):
         pos = 0
         while pos < len(evs):
             cut = pos + rng.randrange(1, len(evs) - pos + 1)
-            rows, st, _ = _segment_rows_for_task(evs[pos:cut], st, timed_out=False)
+            rows, st = _segment_rows_for_task(evs[pos:cut], st, timed_out=False)
             emissions.extend(rows)
             pos = cut
     emit_df = spark.createDataFrame(

@@ -186,7 +186,8 @@ def test_committed_audit_streaming_section_is_clean_and_complete():
     shuffles at 100 TB). The per-family node kind is pinned too: the
     lifecycles must plan as FlatMapGroupsInPandasWithState, the built-in
     windowed aggs as StateStoreSave (+ SessionWindowStateStoreSave for
-    session windows)."""
+    session windows). The conversation pipelines carry no CloudEvent-id
+    dedup node, so each plans one state store per batch."""
     art = _artifact()
     s = art["streaming"]
     assert art["n_streaming"] == len(s) == 7
@@ -217,6 +218,25 @@ def test_committed_audit_streaming_section_is_clean_and_complete():
             assert custom == 1, name
         else:
             assert custom == 0, name
+    # one state store per conversation pipeline: the lifecycle drops
+    # redelivered CloudEvent ids itself, so no dedup node plans beside
+    # it; the consumers without per-task state keep exactly one
+    dedup = {
+        name: row["counts"]["StreamingDeduplicateWithinWatermark"]
+        for name, row in s.items()
+    }
+    for name in (
+        "stream:segments_per_task",
+        "stream:segments_bucketed",
+        "stream:segments_wide",
+    ):
+        assert dedup[name] == 0, name
+    for name in (
+        "stream:agent_status",
+        "stream:agent_status_wide",
+        "stream:hourly_event_counts",
+    ):
+        assert dedup[name] == 1, name
 
 
 def test_scanner_stateful_counts_do_not_overlap():

@@ -75,25 +75,24 @@ def _event_sequences(draw):
 def test_conversation_machine_split_invariance(events, data):
     """For ANY event sequence (including nonsensical orderings the
     domain fuzzers never produce) and ANY split point, batch-split
-    replay == one-shot: same rows, same final state, same open flag.
-    Also: the machine never raises on malformed orderings."""
+    replay == one-shot: same rows, same final state. Also: the machine
+    never raises on malformed orderings."""
     from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
         _segment_rows_for_task,
     )
 
-    one_shot, st_full, open_full = _segment_rows_for_task(
+    one_shot, st_full = _segment_rows_for_task(
         [dict(e) for e in events], {}, timed_out=False
     )
     cut = data.draw(st.integers(min_value=0, max_value=len(events)))
-    r1, mid, _ = _segment_rows_for_task(
+    r1, mid = _segment_rows_for_task(
         [dict(e) for e in events[:cut]], {}, timed_out=False
     )
-    r2, st_split, open_split = _segment_rows_for_task(
+    r2, st_split = _segment_rows_for_task(
         [dict(e) for e in events[cut:]], mid, timed_out=False
     )
     assert r1 + r2 == one_shot
     assert st_split == st_full
-    assert open_split == open_full
 
 
 @settings(max_examples=300, deadline=None)
@@ -106,20 +105,19 @@ def test_conversation_machine_timeout_after_split_is_pure(events, data):
         _segment_rows_for_task,
     )
 
-    _, st_full, open_full = _segment_rows_for_task(
+    _, st_full = _segment_rows_for_task(
         [dict(e) for e in events], {}, timed_out=False
     )
     cut = data.draw(st.integers(min_value=0, max_value=len(events)))
-    _, mid, _ = _segment_rows_for_task(
+    _, mid = _segment_rows_for_task(
         [dict(e) for e in events[:cut]], {}, timed_out=False
     )
-    _, st_split, _ = _segment_rows_for_task(
+    _, st_split = _segment_rows_for_task(
         [dict(e) for e in events[cut:]], mid, timed_out=False
     )
-    if open_full:
-        t_full, _, _ = _segment_rows_for_task([], st_full, timed_out=True)
-        t_split, _, _ = _segment_rows_for_task([], st_split, timed_out=True)
-        assert t_split == t_full
+    t_full, _ = _segment_rows_for_task([], st_full, timed_out=True)
+    t_split, _ = _segment_rows_for_task([], st_split, timed_out=True)
+    assert t_split == t_full
 
 
 @settings(max_examples=300, deadline=None)

@@ -176,16 +176,16 @@ def test_stream_state_machine_pure_fn_replay():
          "task_sid": "T", "reservation_sid": "R", "worker_sid": "W",
          "custom_conversation_id": None},
     ]
-    one_shot, _, open1 = _segment_rows_for_task(list(events), {}, timed_out=False)
+    one_shot, st1 = _segment_rows_for_task(list(events), {}, timed_out=False)
     # replay split at every boundary
     for cut in range(1, len(events)):
         st: dict = {}
         rows = []
-        r1, st, _ = _segment_rows_for_task(events[:cut], st, timed_out=False)
-        r2, st, open2 = _segment_rows_for_task(events[cut:], st, timed_out=False)
+        r1, st = _segment_rows_for_task(events[:cut], st, timed_out=False)
+        r2, st = _segment_rows_for_task(events[cut:], st, timed_out=False)
         rows = r1 + r2
         assert rows == one_shot, f"split at {cut} diverged"
-        assert open2 == open1
+        assert st == st1
 
 
 def test_foreachbatch_agents_upsert_matches_batch(spark):
@@ -428,8 +428,8 @@ def test_bucketed_lifecycle_hot_shard_fuzz(spark, tmp_path):
     # hot shard's document holds exactly the per-task survivors (state
     # growth bounded by the same watermark reaping in both keyings)
     def _open_tasks(ckpt: str, bucketed: bool) -> set:
-        # two stateful operators exist (watermark dedup + lifecycle);
-        # probe operator ids for the one whose value carries state_json
+        # the lifecycle is the only stateful operator; probe operator
+        # ids for the one whose value carries state_json
         rows = None
         for op_id in range(4):
             try:
@@ -459,6 +459,32 @@ def test_bucketed_lifecycle_hot_shard_fuzz(spark, tmp_path):
     assert _open_tasks(str(tmp_path / "bkt"), True) == _open_tasks(
         str(tmp_path / "per"), False
     )
+
+
+@pytest.mark.parametrize("buckets", [None, 4], ids=["per_task", "bucketed"])
+def test_redelivery_to_closed_task_emits_once(spark, tmp_path, buckets):
+    """A task that holds nothing open after its first micro-batch (a
+    task.canceled with no queue entry emits its CONVERSATION row at
+    once) gets its event redelivered in the next micro-batch. The copy
+    is inside the watermark, so only the task's state can drop it:
+    each keying must emit the row exactly once."""
+    import datetime as dt
+
+    from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
+        run_fixture_stream,
+    )
+
+    t0 = dt.datetime(2024, 7, 1, 8, 0, 0)
+    canceled = _ce("RD", 1, "task.canceled", t0, task_sid="TC",
+                   task_queue_name="Q", task_queue_sid="WQ",
+                   workflow_name="WF", task_channel_unique_name="voice")
+    got = run_fixture_stream(
+        spark, str(tmp_path), files=2, buckets=buckets,
+        events_in=[canceled, canceled], keep_order=True,
+    ).collect()
+    assert [(r["segment_kind"], r["conversation_id"]) for r in got] == [
+        ("CONVERSATION", "TC")
+    ], got
 
 
 @pytest.mark.parametrize(
@@ -1054,6 +1080,80 @@ def test_bucketed_rearm_clamps_to_watermark_plus_one():
     ahead = FakeState(min_deadline - 60_000)
     list(_bucket_lifecycle_fn((0,), iter([pdf]), ahead))
     assert ahead.armed == min_deadline
+
+
+def test_lifecycle_state_drops_redelivered_event_ids():
+    """The lifecycle drops redelivered CloudEvents in its own state
+    (``_unapplied_events``): a copy in the same micro-batch is skipped,
+    and so is a copy in a later one. A task with nothing open keeps its
+    state, ids included, until its deadline under both keyings, so a
+    redelivered terminal event cannot emit its segment twice."""
+    import datetime as dt
+
+    import pandas as pd
+
+    from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
+        CONVERSATION_TIMEOUT,
+        _bucket_lifecycle_fn,
+        _lifecycle_fn,
+        _segment_rows_for_task,
+        _unapplied_events,
+    )
+    from twilio_event_streams_reporting_example_spark.taskrouter import schema as S
+
+    t0 = dt.datetime(2024, 7, 1, 8, 0, 0)
+
+    def ev(eid, et, sec, rsid=None):
+        return {
+            "eventtype": et,
+            "ts": (t0 + dt.timedelta(seconds=sec)).isoformat(),
+            "task_sid": "T",
+            "reservation_sid": rsid,
+            "worker_sid": None,
+            "custom_segment_link": None,
+            "wtip": None,
+            "raw": f"raw-{eid}",
+            "arrival_idx": None,
+            "event_id": eid,
+        }
+
+    st: dict = {}
+    created = ev("E1", S.ET_RESERVATION_CREATED, 0, "R")
+    rejected = ev("E2", S.ET_RESERVATION_REJECTED, 5, "R")
+    fresh = _unapplied_events([created, rejected, dict(rejected)], st)
+    assert [e["event_id"] for e in fresh] == ["E1", "E2"]
+    rows, st = _segment_rows_for_task(fresh, st, timed_out=False)
+    assert [r["segment_kind"] for r in rows] == [S.CONVO_REJECTED]
+    # next batch: the copy is skipped, the new event applies
+    fresh = _unapplied_events([dict(rejected), ev("E3", S.ET_TASK_CANCELED, 9)], st)
+    assert [e["event_id"] for e in fresh] == ["E3"]
+    rows, st = _segment_rows_for_task(fresh, st, timed_out=False)
+    assert [r["segment_kind"] for r in rows] == [S.CONVO_SEG]
+    assert st["ids"] == ["E1", "E2", "E3"]
+
+    def ms(t):
+        return int(t.replace(tzinfo=dt.timezone.utc).timestamp() * 1000)
+
+    # a task.canceled with no queue entry closes the task at once
+    pdf = pd.DataFrame(
+        {
+            "eventtype": [S.ET_TASK_CANCELED],
+            "ts": [pd.Timestamp(t0)],
+            "task_sid": ["T"],
+            "reservation_sid": [None],
+            "worker_sid": [None],
+            "value": ["raw-c1"],
+            "event_id": ["C1"],
+        }
+    )
+    for fn, key in ((_lifecycle_fn, ("T",)), (_bucket_lifecycle_fn, (0,))):
+        state = FakeState(ms(t0) - 600_000)
+        first = list(fn(key, iter([pdf]), state))
+        assert [len(d) for d in first] == [1], fn.__name__
+        # nothing is open, yet the state stays until the task's deadline
+        assert state.exists, fn.__name__
+        assert state.armed == ms(t0 + CONVERSATION_TIMEOUT), fn.__name__
+        assert list(fn(key, iter([pdf.copy()]), state)) == [], fn.__name__
 
 
 def test_agent_status_machine_pure_fn_replay():

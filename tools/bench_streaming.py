@@ -10,10 +10,10 @@ a synthetic-scale event count, executor-generated end to end:
     spooled to JSON-line files executor-side, then
     parse_stream -> applyInPandasWithState conversation lifecycle ->
     noop sink, availableNow. Measures the stateful per-conversation
-    correlation path (envelope parse, dedup state, Arrow group batches,
-    python state machine, emit).
-  - hourly_window: the SAME parsed stream through the watermark +
-    tumbling-window aggregation (hourly_event_counts_stream) -> noop.
+    correlation path (envelope parse, Arrow group batches, python state
+    machine with its CloudEvent-id dedup, emit).
+  - hourly_window: the SAME parsed stream through the watermark dedup
+    + tumbling-window aggregation (hourly_event_counts_stream) -> noop.
     Measures the pure-JVM windowed-agg path for contrast.
 
 Prints ONE JSON line and writes BENCH_STREAMING.json at the repo root

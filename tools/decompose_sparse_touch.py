@@ -62,9 +62,9 @@ def _pct(xs, f):
 
 def _batch_breakdown(q) -> dict:
     """p50/p95 of every durationMs component and, PER STATE OPERATOR
-    (the lifecycle pipelines carry two: parse_stream's
-    dropDuplicatesWithinWatermark and the applyInPandasWithState
-    lifecycle), the commit/row/memory stats —
+    (the lifecycle pipelines carry one, the applyInPandasWithState
+    lifecycle, which also drops redelivered CloudEvent ids), the
+    commit/row/memory stats —
     keyed by the operator's reported name."""
     durs: dict[str, list[float]] = {k: [] for k in _DUR_KEYS}
     st: dict[str, dict[str, list[float]]] = {}
@@ -161,9 +161,9 @@ def main() -> int:
             n_full,
         )
         run(
-            "parse_floor",  # + from_json projection + the
-            # dropDuplicatesWithinWatermark STATE op (parse_stream's
-            # tail) — isolates the dedup store's per-batch cost
+            "parse_floor",  # + the from_json projection and the
+            # watermark (parse_stream): still no state op, so the
+            # lifecycle rows below isolate the one state store's cost
             lambda ev: parse_stream(ev).filter(
                 F.col("task_sid").isNotNull()
             ),

@@ -85,11 +85,14 @@ INFO_NODES = (
     # the designed shape (Spark rejects two applyInPandasWithStates in
     # one query anyway); the counters make that pinnable from the
     # artifact. StateStoreSave/SessionWindowStateStoreSave are the
-    # built-in streaming-agg state nodes (hourly windows, sessions).
+    # built-in streaming-agg state nodes (hourly windows, sessions);
+    # StreamingDeduplicateWithinWatermark is the CloudEvent-id dedup,
+    # which the conversation lifecycle does in its own state.
     "FlatMapGroupsInPandasWithState",
     "TransformWithStateInPySpark",
     "StateStoreSave",
     "SessionWindowStateStoreSave",
+    "StreamingDeduplicateWithinWatermark",
 )
 
 # "FlatMapGroupsInPandas" must not also count the WithState stateful

@@ -769,8 +769,9 @@ def scale_stream_summary(
     ),
     doc=(
         "Structured Streaming lifecycle over the fixture (watermark + "
-        "dropDuplicatesWithinWatermark + applyInPandasWithState, "
-        "event-time timeout → CORRUPTED CONVERSATION), run under BOTH "
+        "applyInPandasWithState, which drops redelivered CloudEvent ids "
+        "in its task state; event-time timeout → CORRUPTED "
+        "CONVERSATION), run under BOTH "
         "state keyings and union-tagged by `keying`: 'per_task' (one "
         "state doc per task — the canonical form) and 'bucketed' (state "
         "sharded over hash buckets of tasks — the throughput form, 8x "

@@ -70,6 +70,19 @@ def scale_input_partitions(spark: "SparkSession") -> int:
     return max(2, min(spark.sparkContext.defaultParallelism, budget_tasks))
 
 
+# the default driver heap stays at or below 16g however large the host
+MAX_DEFAULT_DRIVER_MEM_MB = 16 << 10
+
+
+def default_driver_memory(phys_bytes: int) -> str:
+    """Driver heap for a host with ``phys_bytes`` of physical memory when
+    ``SPARK_GRAFT_DRIVER_MEM`` is unset: three quarters of it, never above
+    16g. The driver is the whole local-mode cluster, but a heap ceiling
+    past physical memory lets the JVM grow into swap or the OOM killer
+    before it collects."""
+    return f"{min(MAX_DEFAULT_DRIVER_MEM_MB, phys_bytes * 3 // 4 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "twilio_event_streams_reporting_example_spark",
     shuffle_partitions: int | None = None,
@@ -90,6 +103,9 @@ def get_spark(
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
         shuffle_partitions = cpus
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(
+        os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    )
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -100,7 +116,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         # Console progress bars write \r-separated fragments to the merged
         # output stream; a fragment glued onto the front of a machine-read

@@ -5,7 +5,7 @@ scale: Event Streams → a Kafka (or Kinesis-via-Kafka-API) topic → this
 reader → ``parse_stream`` → the same stateful lifecycle / windowed
 aggregations the file-source harnesses exercise. Everything downstream
 of the reader is source-agnostic — ``parse_stream`` takes any streaming
-DataFrame with a string ``value`` column (taskrouter_stream.py:303), so
+DataFrame with a string ``value`` column, so
 the full test surface (fixture goldens, batch parity, fuzz) certifies
 the Kafka path's transformations too; only the connector I/O itself is
 environment-dependent.
@@ -44,8 +44,10 @@ def kafka_cloudevents_reader(
         .option("kafka.bootstrap.servers", bootstrap_servers)
         .option("subscribe", topic)
         .option("startingOffsets", starting_offsets)
-        # redelivery is handled semantically (CloudEvent-id dedup within
-        # the watermark in parse_stream), so a lost-offset restart should
+        # redelivery is handled semantically (each consumer of
+        # parse_stream drops repeated CloudEvent ids: the conversation
+        # lifecycle in its task state, the agent-status and hourly
+        # streams within the watermark), so a lost-offset restart should
         # reprocess, not die
         .option("failOnDataLoss", "false")
     )
@@ -61,8 +63,9 @@ def cloudevents_from_kafka_records(records: DataFrame) -> DataFrame:
     binary, ``topic``, ``partition``, ``offset``, ``timestamp``,
     ``timestampType``): the CloudEvent JSON is the UTF-8 ``value``; keys,
     offsets, and broker timestamps are transport metadata the engine
-    deliberately ignores (event time comes from the payload, redelivery
-    is handled by CloudEvent-id dedup within the watermark). Split out
+    deliberately ignores (event time comes from the payload; redelivery
+    is handled by the consumers of ``parse_stream``, which drop repeated
+    CloudEvent ids). Split out
     from the reader so the wire-format adaptation is testable without a
     broker — tests/test_streaming.py feeds a file-backed stream with this
     exact schema through the full stateful pipeline."""
@@ -72,8 +75,8 @@ def cloudevents_from_kafka_records(records: DataFrame) -> DataFrame:
 def kafka_events_stream(
     spark: SparkSession, bootstrap_servers: str, topic: str
 ) -> DataFrame:
-    """Kafka topic → parsed, watermarked, CloudEvent-id-deduplicated
-    event stream (the shared ``parse_stream`` contract). Requires the
-    spark-sql-kafka connector on the classpath."""
+    """Kafka topic → parsed, watermarked event stream (the shared
+    ``parse_stream`` contract; its consumers drop redelivered CloudEvent
+    ids). Requires the spark-sql-kafka connector on the classpath."""
     raw = kafka_cloudevents_reader(spark, bootstrap_servers, topic).load()
     return cloudevents_from_kafka_records(raw)

@@ -5,19 +5,26 @@ hazards — README.md:13 out-of-order, events.js:488 duplicate delivery):
 
   readStream (CloudEvent JSON lines)
     → envelope from_json + type filter              (S1, S3, F1)
-    → withWatermark(ts) + dropDuplicatesWithinWatermark(event_id)
+    → withWatermark(ts)
     → applyInPandasWithState keyed by task_sid      (§2.5 state machine)
+        drops redelivered CloudEvent ids in the task's own state;
         emits QUEUE / CONVERSATION / terminal segments as reservations
         resolve; event-time timeout emits CORRUPTED CONVERSATION —
         giving meaning to the reference's declared-but-never-produced
         kind (events.js:30)
     → append sink
 
+One stateful operator, one shuffle per micro-batch: the lifecycle
+state doubles as the duplicate-delivery filter (``_unapplied_events``),
+so no separate ``dropDuplicatesWithinWatermark`` stage commits its own
+state stores. Consumers without per-task state (the agent-status
+lifecycle, the hourly counts) deduplicate for themselves.
+
 The stateful operator keys on **task_sid** (not reservation_sid):
 every event of one conversation — queue entries, task aborts, and all
 reservation.* events — carries it, so one state key sees the whole
 lifecycle and the transfer re-queue case stays within one partition.
-State is O(open reservations per task), bounded by the timeout.
+State is O(events per task), kept until the task's deadline.
 
 The stateful operator emits NARROW rows: a branch tag, the segment
 kind, the computed override measures, and the raw CloudEvent that
@@ -94,8 +101,9 @@ CORE_COLUMNS = [
 ]
 
 # State: one JSON document per task (entry anchor + per-reservation
-# correlation anchors). JSON keeps the schema evolvable; the payload is
-# tiny (a handful of timestamps per open reservation).
+# correlation anchors + the CloudEvent ids already applied). JSON keeps
+# the schema evolvable; the payload is small (a handful of timestamps
+# per open reservation, one id per event).
 STATE_SCHEMA = T.StructType([T.StructField("state_json", T.StringType())])
 
 
@@ -113,11 +121,11 @@ def _secs(end_iso: str, start_iso: str) -> int:
 
 def _segment_rows_for_task(
     events: list[dict], st: dict, timed_out: bool
-) -> tuple[list[dict], dict, bool]:
+) -> tuple[list[dict], dict]:
     """Advance one task's state machine over new (ts-ordered) events.
 
-    Returns (emitted rows, new state, has_open_state). Pure function —
-    unit-testable without a streaming query."""
+    Returns (emitted rows, new state). Pure function — unit-testable
+    without a streaming query."""
     out: list[dict] = []
     res: dict[str, Any] = st.setdefault("res", {})  # reservation_sid → anchors
 
@@ -144,6 +152,11 @@ def _segment_rows_for_task(
     for ev in events:
         et = ev["eventtype"]
         ts = ev["ts"]
+        # the latest time of ANY applied event, skipped branches and late
+        # arrivals included: the deadline must cover every id the state
+        # holds (see _unapplied_events)
+        if "last_ts" not in st or _dt(st["last_ts"]) < _dt(ts):
+            st["last_ts"] = ts
         rsid = ev.get("reservation_sid")
         if et in (S.ET_TASK_QUEUE_ENTERED, S.ET_TASK_TRANSFER_INITIATED):
             st["entry_ts"] = ts
@@ -228,7 +241,6 @@ def _segment_rows_for_task(
                     date_iso=entry, queue_time=q, abandon_time=q,
                 )
             emit("convo_ab", S.CONVO_SEG, ev, queue_time=q, abandon_time=q)
-        st["last_ts"] = ts
 
     if timed_out:
         # watermark passed the conversation timeout: every still-open
@@ -248,8 +260,7 @@ def _segment_rows_for_task(
                 )
                 res.pop(rsid)
 
-    has_open = bool(res) or "entry_ts" in st
-    return out, st, has_open
+    return out, st
 
 
 def _events_from_pdfs(pdf_iter: Iterator[pd.DataFrame]) -> list[dict]:
@@ -315,8 +326,41 @@ def _events_from_pdfs(pdf_iter: Iterator[pd.DataFrame]) -> list[dict]:
     return events
 
 
+def _unapplied_events(events: list[dict], st: dict) -> list[dict]:
+    """Drop redelivered CloudEvents: skip every event whose id the task's
+    state ``st`` has already applied, and record the ids of the rest in
+    it. ``events`` is ts-ordered (``_events_from_pdfs``), so of two
+    copies in one micro-batch the first arrival is kept whenever the
+    source carries ``arrival_idx`` — the batch engine's "first arrival
+    wins".
+
+    Why forgetting the ids at the task's deadline is safe: both keyings
+    keep a task's state until the watermark passes ``last_ts`` +
+    ``CONVERSATION_TIMEOUT``, and ``last_ts`` is the latest event time
+    the task applied, so the timeout fires only once the watermark is
+    past every id the state holds. The watermark never moves back, so
+    any later copy of those events is older than it, and
+    ``applyInPandasWithState`` under ``EventTimeTimeout`` drops such rows
+    before the state function sees them
+    (``FlatMapGroupsWithStateExecBase.processDataWithPartition`` calls
+    ``applyRemovingRowsOlderThanWatermark``, and the pandas exec inherits
+    it). A copy inside the deadline still finds the state, so no
+    separate ``dropDuplicatesWithinWatermark`` stage is needed."""
+    ids: list[str] = st.setdefault("ids", [])
+    seen = set(ids)
+    fresh = []
+    for ev in events:
+        eid = ev["event_id"]
+        if eid in seen:
+            continue
+        seen.add(eid)
+        ids.append(eid)
+        fresh.append(ev)
+    return fresh
+
+
 def _deadline_ms(st: dict) -> int:
-    """Event-time timeout deadline for an open task state, epoch ms.
+    """Event-time timeout deadline for a task state, epoch ms.
     Event timestamps are UTC-naive; pin the tz before the epoch
     conversion — naive .timestamp() reads the HOST timezone and would
     shift the timeout by the UTC offset on non-UTC hosts."""
@@ -330,25 +374,23 @@ def _lifecycle_fn(
 ) -> Iterator[pd.DataFrame]:
     st = json.loads(state.get[0]) if state.exists else {}
     if state.hasTimedOut:
-        rows, st, has_open = _segment_rows_for_task([], st, timed_out=True)
+        rows, _ = _segment_rows_for_task([], st, timed_out=True)
         state.remove()
     else:
-        events = _events_from_pdfs(pdf_iter)
-        rows, st, has_open = _segment_rows_for_task(events, st, timed_out=False)
-        if has_open:
-            state.update((json.dumps(st),))
-            # a LATE event (admitted within the watermark policy but
-            # with ts far behind the current watermark) can yield a
-            # deadline already at/behind the watermark — Spark rejects
-            # past timeout timestamps, so clamp to watermark+1 and let
-            # the timeout fire next micro-batch (the same re-arm rule
-            # the bucketed keying uses; found by the cross-batch
-            # disorder fuzz)
-            deadline = _deadline_ms(st)
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(max(deadline, wm + 1))
-        elif state.exists:
-            state.remove()
+        events = _unapplied_events(_events_from_pdfs(pdf_iter), st)
+        rows, st = _segment_rows_for_task(events, st, timed_out=False)
+        # kept until the deadline even with nothing open: the state
+        # holds the applied ids (see _unapplied_events)
+        state.update((json.dumps(st),))
+        # a LATE event (admitted within the watermark policy but with
+        # ts far behind the current watermark) can yield a deadline
+        # already at/behind the watermark — Spark rejects past timeout
+        # timestamps, so clamp to watermark+1 and let the timeout fire
+        # next micro-batch (the same re-arm rule the bucketed keying
+        # uses; found by the cross-batch disorder fuzz)
+        deadline = _deadline_ms(st)
+        wm = state.getCurrentWatermarkMs()
+        state.setTimeoutTimestamp(max(deadline, wm + 1))
     if rows:
         yield pd.DataFrame(rows, columns=[f.name for f in EMIT_SCHEMA.fields])
 
@@ -457,10 +499,12 @@ def agent_status_emissions_stream(
     activity_time) emissions; share the wide projection downstream.
     ``idle_ttl`` bounds state under worker churn (see
     :func:`_agent_status_fn_factory`)."""
+    # the worker state can live for the idle TTL (days), so redelivered
+    # ids are dropped by a watermark dedup of the openers, not kept in it
     openers = events.filter(
         F.col("worker_sid").isNotNull()
         & F.col("eventtype").isin(S.ET_WORKER_CREATED, S.ET_WORKER_ACTIVITY_UPDATE)
-    )
+    ).dropDuplicatesWithinWatermark(["event_id"])
     return openers.groupBy("worker_sid").applyInPandasWithState(
         _agent_status_fn_factory(idle_ttl),
         EMIT_SCHEMA,
@@ -518,7 +562,8 @@ def _bucket_lifecycle_fn(
     task that cost IS the throughput ceiling (~15k events/s measured).
     With tasks sharded over LIFECYCLE_BUCKETS groups the overhead
     amortizes across every task in the shard (~5x measured) while state
-    size per group stays bounded by open-tasks-per-shard.
+    size per group stays bounded by the tasks per shard still inside
+    their deadline.
 
     Timeout parity with the per-task variant is EXACT, not wave-
     approximate: the shard's timeout is the MIN deadline over its open
@@ -537,7 +582,7 @@ def _bucket_lifecycle_fn(
         wm = state.getCurrentWatermarkMs()
         for sid in list(tasks):
             if _deadline_ms(tasks[sid]) <= wm:
-                out, _, _ = _segment_rows_for_task([], tasks[sid], timed_out=True)
+                out, _ = _segment_rows_for_task([], tasks[sid], timed_out=True)
                 rows.extend(out)
                 del tasks[sid]
     else:
@@ -557,18 +602,17 @@ def _bucket_lifecycle_fn(
         wm = state.getCurrentWatermarkMs()
         for sid in list(tasks):
             if sid not in by_task and _deadline_ms(tasks[sid]) <= wm:
-                out, _, _ = _segment_rows_for_task([], tasks[sid], timed_out=True)
+                out, _ = _segment_rows_for_task([], tasks[sid], timed_out=True)
                 rows.extend(out)
                 del tasks[sid]
         for sid, evs in by_task.items():
-            out, tst, has_open = _segment_rows_for_task(
-                evs, tasks.get(sid, {}), timed_out=False
+            # every task stays until its own deadline, open or not: its
+            # document holds the applied ids (see _unapplied_events)
+            tst = tasks.setdefault(sid, {})
+            out, _ = _segment_rows_for_task(
+                _unapplied_events(evs, tst), tst, timed_out=False
             )
             rows.extend(out)
-            if has_open:
-                tasks[sid] = tst
-            elif sid in tasks:
-                del tasks[sid]
     if tasks:
         state.update((json.dumps(st),))
         nxt = min(_deadline_ms(t) for t in tasks.values())
@@ -580,10 +624,14 @@ def _bucket_lifecycle_fn(
 
 
 def parse_stream(raw: DataFrame) -> DataFrame:
-    """CloudEvent JSON lines → watermarked, deduplicated event stream.
+    """CloudEvent JSON lines → watermarked event stream.
 
     ``raw``: a streaming DataFrame with a string ``value`` column (file/
-    Kafka source shape)."""
+    Kafka source shape). Redelivered CloudEvents pass through: each
+    consumer drops them itself — the conversation lifecycle in its task
+    state (``_unapplied_events``), ``agent_status_emissions_stream`` and
+    ``hourly_event_counts_stream`` with ``dropDuplicatesWithinWatermark``
+    on ``event_id``."""
     env = raw.select("value", F.from_json("value", S.ENVELOPE_STRUCT).alias("e")).select(
         "value",
         F.col("e.id").alias("event_id"),
@@ -610,9 +658,7 @@ def parse_stream(raw: DataFrame) -> DataFrame:
             ),
         )
     )
-    return ev.withWatermark("ts", WATERMARK_DELAY).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
+    return ev.withWatermark("ts", WATERMARK_DELAY)
 
 
 def segment_emissions_stream(
@@ -687,26 +733,13 @@ def conversation_segments_stream(
     )
 
 
-def write_event_log(events: DataFrame, path: str, checkpoint: str):
-    """S4: append every taskrouter event to the durable parquet log —
-    date-partitioned so downstream batch recomputes prune by day."""
-    return (
-        events.withColumn("event_date", F.to_date("ts"))
-        .writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .partitionBy("event_date")
-        .outputMode("append")
-    )
-
-
 def write_segments_stream(wide: DataFrame, path: str, checkpoint: str):
     """S5 in streaming form: append the wide conversations fact to
     date-partitioned parquet as segments terminalize — the durable
     complement of the batch ``sources.sinks.write_segments`` (same
     layout, so the report queries read either). Exactly-once per
-    segment: the upstream is CloudEvent-id-deduplicated and the file
-    sink commits atomically per micro-batch."""
+    segment: the lifecycle drops redelivered CloudEvent ids in its task
+    state and the file sink commits atomically per micro-batch."""
     return (
         wide.withColumn("segment_date", F.to_date("date"))
         .writeStream.format("parquet")
@@ -841,7 +874,7 @@ def run_scale_stream(
       JVM; ordering that is free by construction must not be
       re-bought with a shuffle). Per-file ascending mtimes +
       ``maxFilesPerTrigger=1`` then yield cross-batch watermark
-      advancement and dedup-state eviction — a single giant batch
+      advancement and task-state eviction — a single giant batch
       would certify the state machine but not the streaming
       machinery. Event time is monotone across files (skew within
       the arrival order is <= 300.2s — task i's completed event at
@@ -859,9 +892,10 @@ def run_scale_stream(
       throughput keying is the one a 100 TB deployment runs, so it is
       the one the certificate exercises.
     - **RocksDB state store + 16 shuffle partitions for the stream**:
-      the CloudEvent-id dedup state alone holds a micro-batch of ids
-      (~n_tasks*5/files) before the watermark evicts it — off-heap in
-      RocksDB so the driver-contract 1g JVM never carries it. 16
+      the lifecycle state holds every applied CloudEvent id of a task
+      until the task's deadline — a micro-batch of ids
+      (~n_tasks*5/files) at a time — off-heap in RocksDB so the
+      driver-contract 1g JVM never carries it. 16
       state partitions (not the session's 200, not even 32): fewer
       state instances collapse per-batch commit cost (PLANS #24), and
       — measured the hard way — the stateful+sink stage's UNMANAGED
@@ -943,9 +977,11 @@ def hourly_event_counts_stream(events: DataFrame) -> DataFrame:
     Streaming pattern (the declared BASELINE approach), over the parsed
     event stream: per-hour, per-eventtype counts, emitted in append mode
     once the watermark passes each window. ``events`` must already carry
-    the watermark (``parse_stream`` output)."""
+    the watermark (``parse_stream`` output); redelivered CloudEvents are
+    dropped here, so each event counts once."""
     return (
-        events.groupBy(F.window("ts", "1 hour"), "eventtype")
+        events.dropDuplicatesWithinWatermark(["event_id"])
+        .groupBy(F.window("ts", "1 hour"), "eventtype")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("window.start").alias("window_start"), "eventtype", "n_events"
@@ -1046,8 +1082,9 @@ def agents_upsert_sink(spark: SparkSession, raw_stream: DataFrame, dim_path: str
     broadcast-sized.
 
     Redelivery + ordering: the raw stream is watermarked and
-    CloudEvent-id-deduplicated BEFORE the sink (same guarantee
-    :func:`parse_stream` gives the segments path), so a duplicate
+    CloudEvent-id-deduplicated BEFORE the sink (the guarantee the
+    conversation lifecycle gives the segments path in its task state,
+    ``_unapplied_events``), so a duplicate
     delivered in a LATER micro-batch cannot re-merge into the dimension.
     Arrival order is unknowable in a distributed stream (redelivery,
     repartitioning), so same-``ts`` ties break on the CloudEvent id — a
