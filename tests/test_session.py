@@ -46,3 +46,34 @@ def test_get_spark_driver_memory_follows_host_unless_set(monkeypatch):
     assert _driver_memory_conf(monkeypatch) == session.default_driver_memory(phys)
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     assert _driver_memory_conf(monkeypatch) == "3g"
+
+
+def test_checkpoint_manager_renames_through_filesystem_and_refuses_overwrite(spark, tmp_path):
+    """A ``file:`` checkpoint gets the FileSystem-based manager, which renames
+    without forking ``readlink``, and keeps the no-overwrite commit that
+    ``HDFSMetadataLog`` relies on to detect a concurrent writer."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    fm = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(tmp_path.as_uri()), hadoop_conf
+    )
+    assert fm.getClass().getName() == session.CHECKPOINT_FILE_MANAGER
+
+    target = tmp_path / "0"
+    path = jvm.org.apache.hadoop.fs.Path(target.as_uri())
+    first = fm.createAtomic(path, False)
+    first.write(bytearray(b"first writer"))
+    first.close()
+    second = fm.createAtomic(path, False)
+    second.write(bytearray(b"second writer"))
+    with pytest.raises(Py4JJavaError) as err:
+        second.close()
+    # Spark raises its SparkFileAlreadyExistsException, a subclass of the
+    # Hadoop exception HDFSMetadataLog catches
+    already_exists = jvm.org.apache.hadoop.fs.FileAlreadyExistsException._java_lang_class
+    assert already_exists.isInstance(err.value.java_exception)
+    assert target.read_bytes() == b"first writer"
+    # ChecksumFileSystem still writes the checksum beside the data file
+    assert (tmp_path / ".0.crc").exists()

@@ -22,6 +22,29 @@ behaviour:
   on its ``PYTHONPATH``. Otherwise the stock daemon stays, so pandas UDFs
   still start and ``registry._ensure_worker_imports`` can ship the package
   with ``addPyFile``.
+
+Streaming checkpoints are written through
+``FileSystemBasedCheckpointFileManager`` instead of Spark's default
+``FileContextBasedCheckpointFileManager``. Every checkpoint write (the
+``offsets/`` and ``commits/`` logs, the file source and sink
+``_spark_metadata`` logs, the RocksDB zip and sst uploads) is a
+``createAtomic``: write a temp file, then rename it. The FileContext rename
+of a ``file:`` path goes through ``AbstractFileSystem.renameInternal``,
+which calls ``getFileLinkStatus`` on source and destination, for the data
+file and again for its ``.crc``; each call ends in
+``RawLocalFileSystem.getFileLinkStatusInternal`` -> ``FileUtil.readLink``
+-> ``Shell.execCommand(readlink ...)``, so without the native Hadoop
+library every rename forks several processes (6-8 ms each). The
+FileSystem manager renames with ``FileSystem.rename``, which is
+``File.renameTo`` on the local file system and forks nothing. The commit
+semantics on ``file:`` are the same: both managers write a temp file and
+rename it, both implement "fail if the destination exists" as a check
+followed by a rename (FileContext in ``renameInternal``, the FileSystem
+manager in ``renameTempFile``), and ``ChecksumFileSystem`` still writes and
+verifies the ``.crc`` files. The choice is for this local-mode session,
+whose checkpoints are local files; on HDFS the FileContext manager's
+rename is atomic and no-overwrite, and a deployment that checkpoints to
+HDFS should keep Spark's default (README, "Deployment-scoped edges").
 """
 
 from __future__ import annotations
@@ -32,6 +55,10 @@ from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 WORKER_DAEMON = f"{__package__}.worker_daemon"
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def workers_import_package(cwd: str, pythonpath: str) -> bool:
@@ -130,6 +157,9 @@ def get_spark(
         # the reference's `{...task_custom, ...worker_attrs}` spread is
         # last-wins (routes/events.js:353-356 in the reference).
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+        # Checkpoint renames without a readlink fork per call (module
+        # docstring).
+        .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
     )
     if workers_import_package(*_worker_cwd_and_pythonpath()):
         builder = builder.config("spark.python.daemon.module", WORKER_DAEMON)
