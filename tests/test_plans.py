@@ -115,7 +115,7 @@ def test_whole_stage_codegen_on_hot_path(spark, sf_dir):
 
 def test_taskrouter_segments_exchange_budget(spark):
     """The whole fact table runs on exactly its four designed hash
-    exchanges (dedup id / reservation pass / task pass / agent pass) —
+    exchanges (dedup event_id / reservation pass / task pass / agent pass) —
     a fifth exchange means a correlation regressed into a join shuffle."""
     plan = _plan(spark, "taskrouter_segments", "unused")
     import re
@@ -127,7 +127,7 @@ def test_taskrouter_segments_exchange_budget(spark):
     keys = {re.search(r"hashpartitioning\((\w+)", e).group(1) for e in hash_exchanges}
     # arrival_idx is the fixture's own input scatter (fixture_df), not an
     # engine shuffle
-    assert keys <= {"id", "reservation_sid", "task_sid", "worker_sid", "arrival_idx"}, keys
+    assert keys <= {"event_id", "reservation_sid", "task_sid", "worker_sid", "arrival_idx"}, keys
 
 
 def test_frame_sample_shuffle_free(spark, sf_dir):

@@ -2,6 +2,7 @@
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -50,3 +51,72 @@ def test_materialize_and_read_back(spark):
             "PartitionFilters"
         )[1][:200]
         assert pruned.count() == live.count()  # fixture is one day
+
+
+def test_initialize_reads_raw_input_once(spark):
+    """The first materialization parses the raw input once: the log, the
+    fact and the agents writes all read one cached parse, so every raw
+    row passes through the scan exactly once."""
+    from twilio_event_streams_reporting_example_spark.sources.incremental import (
+        initialize_taskrouter,
+    )
+    from twilio_event_streams_reporting_example_spark.taskrouter.fixture import fixture_df
+
+    raw = fixture_df(spark)
+    n_raw = raw.count()
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    counted = raw.mapInPandas(count_rows, raw.schema)
+    with tempfile.TemporaryDirectory() as d:
+        initialize_taskrouter(spark, counted, d)
+    assert seen.value == n_raw
+
+
+def test_write_agents_failed_swap_keeps_old_dimension(spark, monkeypatch):
+    """The agents swap moves the live table aside before moving the
+    staged one in, and deletes it only after: when the second rename
+    fails, the old dimension's files are still on disk."""
+    import os
+
+    from twilio_event_streams_reporting_example_spark.plans.taskrouter import (
+        taskrouter_agents_df,
+    )
+    from twilio_event_streams_reporting_example_spark.sources import sinks
+    from twilio_event_streams_reporting_example_spark.taskrouter.fixture import fixture_df
+
+    agents = taskrouter_agents_df(spark, fixture_df(spark), with_ordering=True)
+    real_replace = os.replace
+    renames = []
+
+    def fail_second(src, dst):
+        renames.append((src, dst))
+        if len(renames) == 2:
+            raise OSError("injected failure of the second rename")
+        real_replace(src, dst)
+
+    with tempfile.TemporaryDirectory() as d:
+        path = f"{d}/agents"
+        sinks.write_agents(agents, path)
+        old_files = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+        assert old_files
+
+        monkeypatch.setattr(sinks.os, "replace", fail_second)
+        with pytest.raises(OSError, match="injected"):
+            sinks.write_agents(agents.limit(1), path)
+        monkeypatch.undo()
+
+        assert renames[0][0] == path, "the live table moves aside first"
+        aside = renames[0][1]
+        assert sorted(f for f in os.listdir(aside) if f.endswith(".parquet")) == old_files
+        assert spark.read.parquet(aside).count() == agents.count()
+
+        # a later write succeeds, and leaves only the table and the aside
+        # copy of the failed run beside it
+        sinks.write_agents(agents.limit(1), path)
+        assert spark.read.parquet(path).count() == 1
+        assert sorted(os.listdir(d)) == sorted(["agents", os.path.basename(aside)])

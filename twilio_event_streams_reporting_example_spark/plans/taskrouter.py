@@ -100,21 +100,29 @@ def ingest_taskrouter(raw: DataFrame) -> DataFrame:
     """
     env = raw.select(
         "arrival_idx", F.from_json("raw", S.ENVELOPE_STRUCT).alias("e")
-    ).select("arrival_idx", "e.id", "e.type", F.col("e.data.payload").alias("p"))
+    ).select(
+        F.col("e.id").alias("event_id"),
+        "arrival_idx",
+        "e.type",
+        F.col("e.data.payload").alias("p"),
+    )
 
     ev = env.filter(F.col("type").startswith(S.TASKROUTER_PREFIX)).filter(
-        F.col("id").isNotNull()
+        F.col("event_id").isNotNull()
     )
 
-    # Dedup by CloudEvent id, first arrival wins — one shuffle on id.
-    dw = W.partitionBy("id").orderBy("arrival_idx")
-    ev = ev.withColumn("rn", F.row_number().over(dw)).filter(F.col("rn") == 1).drop("rn")
-
-    return ev.select(
-        F.col("id").alias("event_id"),
-        "arrival_idx",
-        *payload_event_cols(F.col("p")),
+    # the shuffle on id carries the payload struct, not the projection
+    return dedup_first_arrival(ev).select(
+        "event_id", "arrival_idx", *payload_event_cols(F.col("p"))
     )
+
+
+def dedup_first_arrival(events: DataFrame) -> DataFrame:
+    """One row per CloudEvent ``event_id``, the first arrival
+    (``arrival_idx``) winning: one shuffle on the id. The batch ingest
+    and the merge's history ∪ batch union both deduplicate here."""
+    w = W.partitionBy("event_id").orderBy("arrival_idx")
+    return events.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).drop("rn")
 
 
 # ------------------------------------------------- wide projection (P1-P12)
@@ -327,11 +335,10 @@ def _wide_project(un: DataFrame) -> DataFrame:
             base["segment_link"]
         ),
     }
-    casts = {"BIGINT": "long", "VARCHAR": "string", "TIMESTAMP": "timestamp"}
     return un.select(
         *[
             (overrides[name] if name in overrides else base[name])
-            .cast(casts[t])
+            .cast(S.SPARK_TYPE[t])
             .alias(name)
             for name, t in S.SEGMENT_COLUMNS
         ]
@@ -416,12 +423,7 @@ def _reservation_pass(parsed: DataFrame) -> DataFrame:
     is_accepted = et == S.ET_RESERVATION_ACCEPTED
     is_wrapup = et == S.ET_RESERVATION_WRAPUP
     is_completed = et == S.ET_RESERVATION_COMPLETED
-    is_failed = et.isin(
-        S.ET_RESERVATION_REJECTED,
-        S.ET_RESERVATION_TIMEOUT,
-        S.ET_RESERVATION_CANCELED,
-        S.ET_RESERVATION_RESCINDED,
-    )
+    is_failed = et.isin(*S.FAILED_RESERVATION_EVENTS)
     run = (
         W.partitionBy("reservation_sid")
         .orderBy("ts", "arrival_idx")
@@ -537,14 +539,7 @@ def segments_from_parsed(spark: SparkSession, parsed: DataFrame) -> DataFrame:
     accepted = res.filter(
         (et == S.ET_RESERVATION_ACCEPTED) & (F.col("acc_cum") == 1)
     ).drop("acc_cum")
-    failed = res.filter(
-        et.isin(
-            S.ET_RESERVATION_REJECTED,
-            S.ET_RESERVATION_TIMEOUT,
-            S.ET_RESERVATION_CANCELED,
-            S.ET_RESERVATION_RESCINDED,
-        )
-    ).drop("acc_cum")
+    failed = res.filter(et.isin(*S.FAILED_RESERVATION_EVENTS)).drop("acc_cum")
     abandons = _with_null_anchors(
         parsed.filter(et.isin(S.ET_TASK_CANCELED, S.ET_TASK_TRANSFER_FAILED))
     )
@@ -709,14 +704,7 @@ def agents_from_parsed(parsed: DataFrame, with_ordering: bool = False) -> DataFr
     already parsed (see :func:`taskrouter_agents_df`)."""
     parsed.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
     et = F.col("eventtype")
-    workers = parsed.filter(
-        et.isin(
-            S.ET_WORKER_CREATED,
-            S.ET_WORKER_DELETED,
-            S.ET_WORKER_ACTIVITY_UPDATE,
-            S.ET_WORKER_ATTRIBUTES_UPDATE,
-        )
-    )
+    workers = parsed.filter(et.isin(*S.WORKER_EVENT_TYPES))
     w = W.partitionBy("worker_sid")
     ww = w.orderBy(F.col("ts").desc(), F.col("arrival_idx").desc())
     latest = (
@@ -750,8 +738,7 @@ def agents_from_parsed(parsed: DataFrame, with_ordering: bool = False) -> DataFr
         F.when(is_deleted, truncate_ms(F.col("ts"))).otherwise(_null_ts()).alias("date_left"),
     ]
     out = latest.select(*cols, F.col("ts").alias("last_ts"))
-    casts = {"BIGINT": "long", "VARCHAR": "string", "TIMESTAMP": "timestamp"}
-    ordered = [F.col(name).cast(casts[t]).alias(name) for name, t in S.AGENT_COLUMNS]
+    ordered = [F.col(name).cast(S.SPARK_TYPE[t]).alias(name) for name, t in S.AGENT_COLUMNS]
     if with_ordering:
         ordered.append(F.col("last_ts"))
     return out.select(*ordered)

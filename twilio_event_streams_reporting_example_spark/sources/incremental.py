@@ -42,8 +42,15 @@ Per update batch:
                        lands exactly once).
   6. agents          = latest-wins merge of the batch dimension
                        (``agents_from_parsed`` over the one parse) into
-                       the durable one (same plan as the streaming
-                       foreachBatch upsert).
+                       the durable one: ``sinks.merge_agents``, written
+                       by ``sinks.write_agents`` (staged, then swapped in
+                       by rename) — the same two functions the streaming
+                       foreachBatch upsert calls.
+
+The first materialization (:func:`initialize_taskrouter`) parses the raw
+input once as well: the fact plan is built first, which registers the
+parse's cache, so the log write, the fact write and the agents write all
+read that one cached parse, and the raw input is scanned once.
 
 The merge's own checkpoint blocks (the parsed batch and the recompute)
 are dropped by RDD id when it returns — no ``DataFrame.unpersist``, which
@@ -70,43 +77,27 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..registry import checkpoint_rdd_id, unpersist_rdd_ids
 from ..taskrouter import schema as S
-
-_WORKER_EVENTS = [
-    "worker.created",
-    "worker.deleted",
-    "worker.activity.update",
-    "worker.attributes.update",
-]
-
-
-def _dedup_first_arrival(parsed: DataFrame) -> DataFrame:
-    w = W.partitionBy("event_id").orderBy("arrival_idx")
-    return (
-        parsed.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+from .sinks import merge_agents, write_agents, write_event_log, write_segments
 
 
 def initialize_taskrouter(spark: SparkSession, raw: DataFrame, base_dir: str) -> dict:
-    """First materialization: event log + fact + agents dimension.
-    The dimension keeps ``last_ts`` so later batches can merge."""
-    from ..plans.taskrouter import (
-        ingest_taskrouter,
-        taskrouter_agents_df,
-        taskrouter_segments_df,
-    )
-    from .sinks import write_agents, write_event_log, write_segments
+    """First materialization: event log + fact + agents dimension, all
+    from one parse of ``raw``. The dimension keeps ``last_ts`` so later
+    batches can merge."""
+    from ..plans.taskrouter import agents_from_parsed, ingest_taskrouter, segments_from_parsed
 
     paths = _paths(base_dir)
-    write_event_log(ingest_taskrouter(raw), paths["event_log"])
-    write_segments(taskrouter_segments_df(spark, raw), paths["segments"])
-    write_agents(taskrouter_agents_df(spark, raw, with_ordering=True), paths["agents"])
+    parsed = ingest_taskrouter(raw)
+    # built before the log write: its plan caches the parse, so all three
+    # writes read one materialization of it
+    segments = segments_from_parsed(spark, parsed)
+    write_event_log(parsed, paths["event_log"])
+    write_segments(segments, paths["segments"])
+    write_agents(agents_from_parsed(parsed, with_ordering=True), paths["agents"])
     return paths
 
 
@@ -124,7 +115,7 @@ def affected_keys(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
     (agent sessions and the dimension)."""
     aff_tasks = batch.select("task_sid").filter(F.col("task_sid").isNotNull()).distinct()
     aff_workers = (
-        batch.filter(F.col("eventtype").isin(_WORKER_EVENTS))
+        batch.filter(F.col("eventtype").isin(*S.WORKER_EVENT_TYPES))
         .select("worker_sid")
         .filter(F.col("worker_sid").isNotNull())
         .distinct()
@@ -146,7 +137,7 @@ def scoped_history(
     tasks = aff_tasks.select("task_sid", F.lit(True).alias("_by_task"))
     workers = aff_workers.select("worker_sid", F.lit(True).alias("_by_worker"))
     hit = F.col("_by_task").isNotNull() | (
-        F.col("eventtype").isin(_WORKER_EVENTS) & F.col("_by_worker").isNotNull()
+        F.col("eventtype").isin(*S.WORKER_EVENT_TYPES) & F.col("_by_worker").isNotNull()
     )
     return (
         events.join(F.broadcast(tasks), "task_sid", "left")
@@ -179,10 +170,10 @@ def incremental_taskrouter_update(
     Returns the paths plus the list of rewritten fact dates."""
     from ..plans.taskrouter import (
         agents_from_parsed,
+        dedup_first_arrival,
         ingest_taskrouter,
         segments_from_parsed,
     )
-    from ..streaming.taskrouter_stream import _merge_agents
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     paths = _paths(base_dir)
@@ -204,7 +195,7 @@ def incremental_taskrouter_update(
         log = spark.read.parquet(paths["event_log"]).drop("event_date")
         scoped_log = scoped_history(log, aff_tasks, aff_workers)
         scoped_new = scoped_history(new_parsed, aff_tasks, aff_workers)
-        scoped_all = _dedup_first_arrival(
+        scoped_all = dedup_first_arrival(
             scoped_log.unionByName(scoped_new.select(*scoped_log.columns))
         )
         recomputed = materialize(segments_from_parsed(spark, scoped_all))
@@ -258,13 +249,9 @@ def incremental_taskrouter_update(
 
         # 6. latest-wins merge of the agents dimension
         batch_dim = agents_from_parsed(new_parsed, with_ordering=True)
-        existing = spark.read.parquet(paths["agents"])
-        merged_dim = _merge_agents(existing, batch_dim)
-        staging = f"{paths['agents']}__staging"
-        merged_dim.coalesce(1).write.mode("overwrite").parquet(staging)
-        if os.path.exists(paths["agents"]):
-            shutil.rmtree(paths["agents"])
-        os.replace(staging, paths["agents"])
+        write_agents(
+            merge_agents(spark.read.parquet(paths["agents"]), batch_dim), paths["agents"]
+        )
     finally:
         unpersist_rdd_ids(spark.sparkContext, blocks)
     return {**paths, "touched_dates": [str(d) for d in touched]}

@@ -51,6 +51,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
 from typing import Any, Iterator
 
 import pandas as pd
@@ -209,12 +210,7 @@ def _segment_rows_for_task(
                 link=ev.get("custom_segment_link"),
                 link_set=True,
             )
-        elif et in (
-            S.ET_RESERVATION_REJECTED,
-            S.ET_RESERVATION_TIMEOUT,
-            S.ET_RESERVATION_CANCELED,
-            S.ET_RESERVATION_RESCINDED,
-        ):
+        elif et in S.FAILED_RESERVATION_EVENTS:
             kind = {
                 S.ET_RESERVATION_REJECTED: S.CONVO_REJECTED,
                 S.ET_RESERVATION_TIMEOUT: S.CONVO_MISSED,
@@ -750,6 +746,25 @@ def write_segments_stream(wide: DataFrame, path: str, checkpoint: str):
     )
 
 
+_SPOOL_MTIME = 1_700_000_000
+
+
+def _spool(indir: str, ordered: list, files: int) -> None:
+    """Write ``ordered`` to ``files`` JSON-line chunk files in ``indir``,
+    in order. The file source picks files up oldest-mtime-first, so each
+    file gets a strictly greater mtime than the one before it (files
+    written in the same clock tick would otherwise arrive in arbitrary
+    order and legitimately be dropped as late past the watermark)."""
+    os.makedirs(indir, exist_ok=True)
+    chunk = max(1, (len(ordered) + files - 1) // files)
+    for i in range(0, len(ordered), chunk):
+        path = os.path.join(indir, f"part-{i:04d}.json")
+        with open(path, "w") as f:
+            for e in ordered[i : i + chunk]:
+                f.write(json.dumps(e) + "\n")
+        os.utime(path, (_SPOOL_MTIME + i, _SPOOL_MTIME + i))
+
+
 def run_fixture_stream(
     spark: SparkSession,
     workdir: str,
@@ -767,14 +782,11 @@ def run_fixture_stream(
     a batch DataFrame. ``wide=True`` materializes the full ~65-column
     fact stream instead of the core view. ``events_in`` substitutes a
     caller-provided CloudEvent list for the fixture (fuzz harnesses)."""
-    import os
-
     from ..taskrouter.fixture import FIXTURE_EVENTS
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")  # oracle comparability
     indir = os.path.join(workdir, "in")
     ckpt = os.path.join(workdir, "ckpt")
-    os.makedirs(indir, exist_ok=True)
     ordered = (
         list(events_in)
         if keep_order and events_in is not None
@@ -786,17 +798,7 @@ def run_fixture_stream(
             key=lambda e: e["data"]["payload"]["timestamp"],
         )
     )
-    chunk = max(1, (len(ordered) + files - 1) // files)
-    for i in range(0, len(ordered), chunk):
-        path = os.path.join(indir, f"part-{i:04d}.json")
-        with open(path, "w") as f:
-            for e in ordered[i : i + chunk]:
-                f.write(json.dumps(e) + "\n")
-        # the file source picks files up oldest-mtime-first; force strictly
-        # increasing mtimes so arrival order is chronological (files written
-        # in the same clock tick would otherwise arrive in arbitrary order
-        # and legitimately be dropped as late past the watermark)
-        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+    _spool(indir, ordered, files)
 
     raw = (
         spark.readStream.format("text")
@@ -914,8 +916,6 @@ def run_scale_stream(
       tens of thousands of tiny files — a real deployment partitions
       by date because a day holds gigabytes, not 3 rows.
     """
-    import os
-
     from ..taskrouter.scale import synthetic_events
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -994,23 +994,13 @@ def run_fixture_hourly_stream(spark: SparkSession, workdir: str) -> DataFrame:
     event whose only job is to push the watermark past every fixture
     window so append mode emits them all (its own window never closes, so
     it is withheld — the standard closed-window determinism trick)."""
-    import os
-
     from ..taskrouter.fixture import FIXTURE_EVENTS
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     indir = os.path.join(workdir, "in_hourly")
     ckpt = os.path.join(workdir, "ckpt_hourly")
-    os.makedirs(indir, exist_ok=True)
     ordered = sorted(FIXTURE_EVENTS, key=lambda e: e["data"]["payload"]["timestamp"])
-    chunk = max(1, (len(ordered) + 5) // 6)
-    mt = 1_700_000_000
-    for i in range(0, len(ordered), chunk):
-        path = os.path.join(indir, f"part-{i:04d}.json")
-        with open(path, "w") as f:
-            for e in ordered[i : i + chunk]:
-                f.write(json.dumps(e) + "\n")
-        os.utime(path, (mt + i, mt + i))
+    _spool(indir, ordered, 6)
     max_ts = dt.datetime.fromisoformat(
         ordered[-1]["data"]["payload"]["timestamp"].replace("Z", "")
     )
@@ -1023,7 +1013,7 @@ def run_fixture_hourly_stream(spark: SparkSession, workdir: str) -> DataFrame:
     adv_path = os.path.join(indir, "part-zzzz.json")
     with open(adv_path, "w") as f:
         f.write(json.dumps(advancer) + "\n")
-    os.utime(adv_path, (mt + 10_000, mt + 10_000))
+    os.utime(adv_path, (_SPOOL_MTIME + 10_000, _SPOOL_MTIME + 10_000))
 
     raw = spark.readStream.format("text").option("maxFilesPerTrigger", 1).load(indir)
     agg = hourly_event_counts_stream(parse_stream(raw))
@@ -1042,44 +1032,16 @@ def run_fixture_hourly_stream(spark: SparkSession, workdir: str) -> DataFrame:
 # ------------------------------------------------- agents upsert sink (S7)
 
 
-def _merge_agents(existing: DataFrame | None, batch_dim: DataFrame) -> DataFrame:
-    """Latest-wins merge of a batch's agent rows into the current dim:
-    newest ``last_ts`` supplies the whole attribute row + state/date_left
-    (each reference upsert fully overwrites, events.js:240-246);
-    date_joined keeps the global minimum."""
-    from ..taskrouter.schema import AGENT_COLUMNS
-
-    merged = batch_dim if existing is None else existing.unionByName(batch_dim)
-    attr_cols = [c for c, _ in AGENT_COLUMNS if c not in ("agent_uuid", "date_joined")]
-    packed = merged.select(
-        "agent_uuid",
-        "date_joined",
-        "last_ts",
-        F.struct(*attr_cols).alias("row"),
-    )
-    agg = packed.groupBy("agent_uuid").agg(
-        F.max_by("row", "last_ts").alias("row"),
-        F.min("date_joined").alias("date_joined"),
-        F.max("last_ts").alias("last_ts"),
-    )
-    return agg.select(
-        "agent_uuid",
-        *[F.col(f"row.{c}").alias(c) for c in attr_cols if c != "date_joined"],
-        "date_joined",
-        "last_ts",
-    ).select(*[c for c, _ in AGENT_COLUMNS], "last_ts")
-
-
 def agents_upsert_sink(spark: SparkSession, raw_stream: DataFrame, dim_path: str):
     """foreachBatch MERGE upsert for the agents dimension (SURVEY Phase 2
     item 12): per micro-batch, derive this batch's latest-wins agent rows
     and merge them into the durable dimension.
 
-    On plain parquet the merge is read→union→latest-wins→staging-write→
-    swap (atomic enough for a single writer); on a table format with
-    MERGE INTO (Delta/Iceberg) the same ``_merge_agents`` plan becomes
-    the MERGE source. State per agent is one row — the dimension stays
-    broadcast-sized.
+    On plain parquet the merge is read→union→latest-wins
+    (``sources.sinks.merge_agents``)→staged write→swap
+    (``sources.sinks.write_agents``, the batch merge's writer too; atomic
+    enough for a single writer). State per agent is one row — the
+    dimension stays broadcast-sized.
 
     Redelivery + ordering: the raw stream is watermarked and
     CloudEvent-id-deduplicated BEFORE the sink (the guarantee the
@@ -1090,10 +1052,8 @@ def agents_upsert_sink(spark: SparkSession, raw_stream: DataFrame, dim_path: str
     repartitioning), so same-``ts`` ties break on the CloudEvent id — a
     total order intrinsic to the data, identical on failure replay,
     unlike ``monotonically_increasing_id``'s partition-dependent values."""
-    import os
-    import shutil
-
     from ..plans.taskrouter import taskrouter_agents_df
+    from ..sources.sinks import merge_agents, write_agents
 
     deduped = (
         raw_stream.select(
@@ -1118,16 +1078,9 @@ def agents_upsert_sink(spark: SparkSession, raw_stream: DataFrame, dim_path: str
             F.col("value").alias("raw"),
         )
         batch_dim = taskrouter_agents_df(spark, raw, with_ordering=True)
-        if batch_dim.rdd.isEmpty():
+        if batch_dim.isEmpty():
             return
-        existing = None
-        if os.path.exists(dim_path):
-            existing = spark.read.parquet(dim_path)
-        merged = _merge_agents(existing, batch_dim)
-        staging = f"{dim_path}__staging"
-        merged.coalesce(1).write.mode("overwrite").parquet(staging)
-        if os.path.exists(dim_path):
-            shutil.rmtree(dim_path)
-        os.replace(staging, dim_path)
+        existing = spark.read.parquet(dim_path) if os.path.exists(dim_path) else None
+        write_agents(merge_agents(existing, batch_dim), dim_path)
 
     return deduped.writeStream.foreachBatch(upsert)

@@ -34,6 +34,21 @@ ET_WORKER_DELETED = "worker.deleted"
 ET_WORKER_ACTIVITY_UPDATE = "worker.activity.update"
 ET_WORKER_ATTRIBUTES_UPDATE = "worker.attributes.update"
 
+# the events that end a reservation without a conversation (terminal
+# ring-only segments) and the events that update the agents dimension
+FAILED_RESERVATION_EVENTS = (
+    ET_RESERVATION_REJECTED,
+    ET_RESERVATION_TIMEOUT,
+    ET_RESERVATION_CANCELED,
+    ET_RESERVATION_RESCINDED,
+)
+WORKER_EVENT_TYPES = (
+    ET_WORKER_CREATED,
+    ET_WORKER_DELETED,
+    ET_WORKER_ACTIVITY_UPDATE,
+    ET_WORKER_ATTRIBUTES_UPDATE,
+)
+
 TASKROUTER_PREFIX = "com.twilio.taskrouter"
 
 # Segment kinds (reference events.js:27-35)
@@ -208,8 +223,10 @@ ENVELOPE_STRUCT = T.StructType(
 # ----------------------------------------------------- output column specs
 
 # (name, sql_type) in canonical order. sql_type is the DuckDB/ANSI type
-# used when rendering golden VALUES oracles; Spark types correspond
-# (BIGINT→long, VARCHAR→string, TIMESTAMP→timestamp).
+# used when rendering golden VALUES oracles; SPARK_TYPE gives the Spark
+# type each one is cast to.
+SPARK_TYPE = {"BIGINT": "long", "VARCHAR": "string", "TIMESTAMP": "timestamp"}
+
 SEGMENT_COLUMNS: list[tuple[str, str]] = (
     [
         ("segment_kind", "VARCHAR"),
