@@ -4,6 +4,7 @@ including late events that retroactively convert IN PROGRESS rows, and
 CloudEvent redelivery across batch boundaries."""
 
 import json
+import os
 import tempfile
 
 import pytest
@@ -45,12 +46,20 @@ def incremental_result(spark):
         infos = [
             incremental_taskrouter_update(spark, b, d) for b in batches[1:]
         ]
+        listing = sorted(os.listdir(d))
         yield {
             "segments": spark.read.parquet(f"{d}/segments").cache(),
             "agents": spark.read.parquet(f"{d}/agents").cache(),
             "event_log": spark.read.parquet(f"{d}/event_log").cache(),
             "infos": infos,
+            "listing": listing,
         }
+
+
+def test_store_holds_only_its_tables(incremental_result):
+    # staging and aside directories of the writers are gone once each
+    # write commits
+    assert incremental_result["listing"] == ["agents", "event_log", "segments"]
 
 
 def test_incremental_segments_match_one_shot(spark, incremental_result):
@@ -142,17 +151,15 @@ def test_merge_swap_replaces_every_touched_date(spark, monkeypatch):
     rows elsewhere, so the date ends with no rows: its partition must go
     (a dynamic partition overwrite would keep it, and the stale row).
 
-    The touched partitions are staged outside the table root: a first
+    The touched partitions are staged beside the table root: a first
     run that dies after its staging write leaves no ``segment_date=``
     directory a reader of the fact would pick up and the fact as it was;
     the re-run of the same batch then brings the fact to the one-shot
     result."""
-    import os
-
     from twilio_event_streams_reporting_example_spark.plans.taskrouter import (
         ingest_taskrouter,
     )
-    from twilio_event_streams_reporting_example_spark.sources import incremental
+    from twilio_event_streams_reporting_example_spark.sources import incremental, sinks
 
     def crash(*args):
         raise RuntimeError("injected crash before the swap")
@@ -183,7 +190,7 @@ def test_merge_swap_replaces_every_touched_date(spark, monkeypatch):
         fact = spark.read.parquet(table)
         before = spark.createDataFrame(fact.collect(), fact.schema)
 
-        monkeypatch.setattr(incremental, "_swap_partitions", crash)
+        monkeypatch.setattr(sinks, "_swap", crash)
         with pytest.raises(RuntimeError, match="injected"):
             incremental.incremental_taskrouter_update(spark, last, d)
         monkeypatch.undo()
@@ -192,12 +199,10 @@ def test_merge_swap_replaces_every_touched_date(spark, monkeypatch):
             os.path.join(base, n)
             for base, dirs, _ in os.walk(d)
             for n in dirs
-            if n.startswith("segment_date=")
+            if n.startswith("segment_date=") and base != table
         ]
         assert staged, "the staging write ran"
-        assert all(
-            os.path.dirname(p) == table or "/_merge/" in p for p in staged
-        ), staged
+        assert not any(p.startswith(table + os.sep) for p in staged), staged
         assert sorted(os.listdir(table)) == before_dirs
         _assert_same_rows(spark.read.parquet(table), before)
 

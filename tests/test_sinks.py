@@ -120,3 +120,29 @@ def test_write_agents_failed_swap_keeps_old_dimension(spark, monkeypatch):
         sinks.write_agents(agents.limit(1), path)
         assert spark.read.parquet(path).count() == 1
         assert sorted(os.listdir(d)) == sorted(["agents", os.path.basename(aside)])
+
+
+def test_write_event_log_appends_each_id_once(spark):
+    """Two log writes that share a date: the second keeps the first's
+    events on that date and skips the id the log already holds."""
+    from twilio_event_streams_reporting_example_spark.sources.sinks import write_event_log
+
+    def events(*rows):
+        return spark.createDataFrame(list(rows), "event_id string, ts string").select(
+            "event_id", F.col("ts").cast("timestamp").alias("ts")
+        )
+
+    a, b, c, d = (
+        ("a", "2024-05-01 09:00:00"),
+        ("b", "2024-05-02 10:00:00"),
+        ("c", "2024-05-02 11:00:00"),
+        ("d", "2024-05-02 12:00:00"),
+    )
+    with tempfile.TemporaryDirectory() as tmp:
+        path = f"{tmp}/event_log"
+        write_event_log(events(a, b, c), path)
+        write_event_log(events(c, d), path)
+        log = spark.read.parquet(path).select("event_id", "ts")
+        assert log.count() == 4
+        assert log.exceptAll(events(a, b, c, d)).count() == 0
+        assert events(a, b, c, d).exceptAll(log).count() == 0

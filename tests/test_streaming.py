@@ -1261,6 +1261,34 @@ def test_scale_stream_restores_session_conf(spark, tmp_path):
     assert spark.conf.get(provider_key, None) == before_provider
 
 
+def test_run_available_now_stops_a_query_past_its_timeout(spark, tmp_path):
+    """A query that cannot drain its source inside the limit raises
+    TimeoutError and is stopped, not left filling its sink."""
+    import time
+
+    from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
+        run_available_now,
+    )
+
+    indir = tmp_path / "in"
+    indir.mkdir()
+    (indir / "part-0.json").write_text("{}\n")
+
+    def slow(batch_df, batch_id):
+        time.sleep(3)
+
+    writer = (
+        spark.readStream.format("text")
+        .load(str(indir))
+        .writeStream.foreachBatch(slow)
+        .queryName("slow_available_now")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+    )
+    with pytest.raises(TimeoutError, match="slow_available_now"):
+        run_available_now(writer, timeout=0.5)
+    assert "slow_available_now" not in [q.name for q in spark.streams.active]
+
+
 def test_segment_audit_detects_corruption(spark):
     """Negative controls for the scale certificate's fingerprint: the
     audit reduction must MOVE when the segment set is corrupted in

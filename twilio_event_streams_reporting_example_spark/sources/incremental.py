@@ -27,25 +27,30 @@ Per update batch:
   4. merge           = the touched dates are the recomputed rows' dates
                        plus the ``segment_date`` of the stale affected
                        fact rows, read in one small job over the
-                       materialized recompute. The touched partitions —
-                       every unaffected row (anti-join on
-                       segment_external_id) plus the recomputed rows —
-                       are written to a staging directory outside the
-                       table root, then each touched partition is swapped
-                       in by rename (:func:`_swap_partitions`); a touched
-                       date left without rows loses its directory.
-                       Untouched dates are not read, not written. The old
-                       partitions are read only by the staging write, so
-                       nothing is checkpointed first.
-  5. log append      = append only events whose ids the FULL log does not
-                       hold (CloudEvent-id redelivery across batches
-                       lands exactly once).
+                       materialized recompute. ``sinks.write_segments``
+                       writes the recomputed rows and every unaffected
+                       row of those dates (anti-join on
+                       segment_external_id) to a staging directory
+                       beside the table root, then swaps each touched
+                       partition in by rename; a touched date left
+                       without rows loses its directory. Untouched dates
+                       are not read, not written. The old partitions are
+                       read only by the staging write, so nothing is
+                       checkpointed first.
+  5. log append      = ``sinks.write_event_log`` appends only the events
+                       whose ids the FULL log does not hold
+                       (CloudEvent-id redelivery across batches lands
+                       exactly once).
   6. agents          = latest-wins merge of the batch dimension
                        (``agents_from_parsed`` over the one parse) into
                        the durable one: ``sinks.merge_agents``, written
                        by ``sinks.write_agents`` (staged, then swapped in
                        by rename) — the same two functions the streaming
                        foreachBatch upsert calls.
+
+This module decides which rows and dates to write; ``sources.sinks`` is
+the one writer of all three tables, for the first materialization and
+the merge alike.
 
 The first materialization (:func:`initialize_taskrouter`) parses the raw
 input once as well: the fact plan is built first, which registers the
@@ -59,10 +64,11 @@ makes the CacheManager re-plan every dependent cached plan. The caches
 query (``registry.scoped_releases``).
 
 A crash before the swap leaves the fact as it was: staged partitions
-sit under ``<base_dir>/_merge/``, which readers of the table never list.
-A crash inside the swap can leave a touched date missing (its old
-directory in the run's ``trash``); recovering from that is the job of a
-merge manifest, which this module does not keep yet.
+sit in ``segments__staging`` beside the table root, which readers of the
+table never list. A crash inside the swap can leave a touched date
+missing (its old directory in ``segments__old.<run>``); recovering from
+that is the job of a merge manifest, which this module does not keep
+yet.
 
 ``arrival_idx`` must be a globally monotone ingest sequence across
 batches (a Kafka-offset analog): first-arrival dedup and same-timestamp
@@ -71,10 +77,6 @@ is what the parity test asserts.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -147,22 +149,6 @@ def scoped_history(
     )
 
 
-def _swap_partitions(staged: str, table: str, names: set[str], trash: str) -> None:
-    """Replace the partition directories ``names`` of ``table`` by their
-    staged versions, one rename pair each: the live directory moves to
-    ``trash``, the staged one (if the write produced it) moves into
-    place. A name with no staged directory is a date whose rows all
-    left it."""
-    os.makedirs(trash)
-    for name in sorted(names):
-        live = os.path.join(table, name)
-        if os.path.exists(live):
-            os.replace(live, os.path.join(trash, name))
-        new = os.path.join(staged, name)
-        if os.path.exists(new):
-            os.replace(new, live)
-
-
 def incremental_taskrouter_update(
     spark: SparkSession, new_raw: DataFrame, base_dir: str
 ) -> dict:
@@ -200,7 +186,7 @@ def incremental_taskrouter_update(
         )
         recomputed = materialize(segments_from_parsed(spark, scoped_all))
 
-        # 4. partition-level merge into the fact, staged then swapped
+        # 4. partition-level merge into the fact: the touched dates' rows
         aff_ext = aff_tasks.select(F.col("task_sid").alias("segment_external_id")).unionByName(
             aff_workers.select(F.col("worker_sid").alias("segment_external_id"))
         )
@@ -218,34 +204,10 @@ def incremental_taskrouter_update(
             keep = fact.filter(F.col("segment_date").isin(touched)).join(
                 F.broadcast(aff_ext), "segment_external_id", "left_anti"
             )
-            cols = [c for c, _ in S.SEGMENT_COLUMNS]
-            merged = keep.select(*cols, "uuid", "segment_date").unionByName(
-                recomputed.select(*cols)
-                .withColumn("uuid", F.expr("uuid()"))
-                .withColumn("segment_date", F.to_date("date"))
-            )
-            run_dir = f"{base_dir}/_merge/{uuid.uuid4().hex}"
-            staged = f"{run_dir}/segments"
-            merged.write.partitionBy("segment_date").parquet(staged)
-            names = {f"segment_date={d}" for d in touched}
-            names |= {n for n in os.listdir(staged) if n.startswith("segment_date=")}
-            _swap_partitions(staged, paths["segments"], names, f"{run_dir}/trash")
-            shutil.rmtree(run_dir)
+            write_segments(recomputed, paths["segments"], keep, touched)
 
-        # 5. append only genuinely-new events to the log. Dedup against the
-        # FULL log's event_ids, not the affected-key-scoped slice: a
-        # redelivered workspace/queue-level event (null task_sid, not a
-        # worker event) falls outside the scope and would otherwise be
-        # appended twice. The anti-join probes a single pruned column
-        # (event_id); at scale, restrict the log scan to the batch's
-        # event_date range for partition pruning.
-        to_append = new_parsed.join(log.select("event_id"), "event_id", "left_anti")
-        (
-            to_append.withColumn("event_date", F.to_date("ts"))
-            .write.mode("append")
-            .partitionBy("event_date")
-            .parquet(paths["event_log"])
-        )
+        # 5. append only genuinely-new events to the log
+        write_event_log(new_parsed, paths["event_log"])
 
         # 6. latest-wins merge of the agents dimension
         batch_dim = agents_from_parsed(new_parsed, with_ordering=True)

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exprs import epoch_seconds
 from ..sources.tables import load_table
+from .taskrouter_stream import run_available_now
 
 SESSION_GAP = "1800 seconds"  # same inclusive-boundary gap as the batch op
 ADVANCER_USER = -1  # no real user_id is negative
@@ -72,34 +73,30 @@ def run_events_session_stream(
     for name in os.listdir(indir):
         os.utime(os.path.join(indir, name), (mt, mt))
 
+    # the advancer lands in the same directory with a later mtime, so the
+    # file source reads it last
+    base_files = set(os.listdir(indir))
     max_ts = base.agg(F.max("tts")).collect()[0][0]
     adv = spark.createDataFrame(
         [(ADVANCER_USER, max_ts + dt.timedelta(days=2), 0.0)],
         "user_id bigint, tts timestamp, value double",
     )
-    advdir = os.path.join(workdir, "adv_sessions")
-    adv.coalesce(1).write.mode("overwrite").parquet(advdir)
-    for name in os.listdir(advdir):
-        if name.endswith(".parquet"):
-            dst = os.path.join(indir, "part-zzzz-advancer.parquet")
-            os.replace(os.path.join(advdir, name), dst)
-            os.utime(dst, (mt + 10_000, mt + 10_000))
+    adv.coalesce(1).write.mode("append").parquet(indir)
+    for name in set(os.listdir(indir)) - base_files:
+        os.utime(os.path.join(indir, name), (mt + 10_000, mt + 10_000))
 
     raw = (
         spark.readStream.schema("user_id bigint, tts timestamp, value double")
         .option("maxFilesPerTrigger", 1)
         .parquet(indir)
     )
-    q = (
+    run_available_now(
         user_sessions_stream(raw)
         .writeStream.format("memory")
         .queryName("user_sessions_stream")
         .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
     return spark.sql(
         f"SELECT * FROM user_sessions_stream WHERE user_id <> {ADVANCER_USER}"
     )

@@ -57,6 +57,7 @@ from typing import Any, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
@@ -625,9 +626,9 @@ def parse_stream(raw: DataFrame) -> DataFrame:
     ``raw``: a streaming DataFrame with a string ``value`` column (file/
     Kafka source shape). Redelivered CloudEvents pass through: each
     consumer drops them itself — the conversation lifecycle in its task
-    state (``_unapplied_events``), ``agent_status_emissions_stream`` and
-    ``hourly_event_counts_stream`` with ``dropDuplicatesWithinWatermark``
-    on ``event_id``."""
+    state (``_unapplied_events``), ``agent_status_emissions_stream``,
+    ``hourly_event_counts_stream`` and ``agents_upsert_sink`` with
+    ``dropDuplicatesWithinWatermark`` on ``event_id``."""
     env = raw.select("value", F.from_json("value", S.ENVELOPE_STRUCT).alias("e")).select(
         "value",
         F.col("e.id").alias("event_id"),
@@ -746,6 +747,21 @@ def write_segments_stream(wide: DataFrame, path: str, checkpoint: str):
     )
 
 
+def run_available_now(writer: DataStreamWriter, timeout: float | None = 300) -> None:
+    """Start ``writer`` with the availableNow trigger and wait until the
+    query has processed everything its source held at start. A query
+    still running after ``timeout`` seconds is stopped and raises
+    ``TimeoutError``: its sink would otherwise be read while it still
+    fills. ``timeout=None`` waits without a limit; a query that failed
+    raises its ``StreamingQueryException``."""
+    q = writer.trigger(availableNow=True).start()
+    # only a bounded wait that ran out returns False (an unbounded one
+    # returns None)
+    if q.awaitTermination(timeout) is False:
+        q.stop()
+        raise TimeoutError(f"streaming query {q.name or q.id} did not finish in {timeout} s")
+
+
 _SPOOL_MTIME = 1_700_000_000
 
 
@@ -816,15 +832,12 @@ def run_fixture_stream(
         name += "_agent"
     if buckets:
         name += "_bucketed"
-    q = (
+    run_available_now(
         seg.writeStream.format("memory")
         .queryName(name)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
     if agent:
         # the agent-status lifecycle is its OWN streaming query over
         # the same source (Spark allows one applyInPandasWithState
@@ -835,15 +848,12 @@ def run_fixture_stream(
         aseg = wide_agent_status_stream(parse_stream(raw))
         if not wide:
             aseg = aseg.select(*CORE_COLUMNS)
-        aq = (
+        run_available_now(
             aseg.writeStream.format("memory")
             .queryName(name + "_astatus")
             .option("checkpointLocation", os.path.join(workdir, "ckpt_agent"))
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        aq.awaitTermination(300)
     out = spark.sql(f"SELECT * FROM {name}")
     if agent:
         out = out.unionByName(spark.sql(f"SELECT * FROM {name}_astatus"))
@@ -954,15 +964,13 @@ def run_scale_stream(
         seg = conversation_segments_stream(
             parse_stream(raw), buckets=buckets
         )
-        q = (
+        run_available_now(
             seg.writeStream.format("parquet")
             .option("path", outdir)
             .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            timeout=None,
         )
-        q.awaitTermination()
     finally:
         if prev_provider is None:
             spark.conf.unset(provider_key)
@@ -1017,15 +1025,12 @@ def run_fixture_hourly_stream(spark: SparkSession, workdir: str) -> DataFrame:
 
     raw = spark.readStream.format("text").option("maxFilesPerTrigger", 1).load(indir)
     agg = hourly_event_counts_stream(parse_stream(raw))
-    q = (
+    run_available_now(
         agg.writeStream.format("memory")
         .queryName("tr_stream_hourly")
         .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
     return spark.sql("SELECT * FROM tr_stream_hourly")
 
 
@@ -1043,11 +1048,11 @@ def agents_upsert_sink(spark: SparkSession, raw_stream: DataFrame, dim_path: str
     enough for a single writer). State per agent is one row — the
     dimension stays broadcast-sized.
 
-    Redelivery + ordering: the raw stream is watermarked and
-    CloudEvent-id-deduplicated BEFORE the sink (the guarantee the
-    conversation lifecycle gives the segments path in its task state,
-    ``_unapplied_events``), so a duplicate
-    delivered in a LATER micro-batch cannot re-merge into the dimension.
+    Redelivery + ordering: the raw stream is parsed (``parse_stream``,
+    watermarked) and CloudEvent-id-deduplicated BEFORE the sink (the
+    guarantee the conversation lifecycle gives the segments path in its
+    task state, ``_unapplied_events``), so a duplicate delivered in a
+    LATER micro-batch cannot re-merge into the dimension.
     Arrival order is unknowable in a distributed stream (redelivery,
     repartitioning), so same-``ts`` ties break on the CloudEvent id — a
     total order intrinsic to the data, identical on failure replay,
@@ -1056,16 +1061,9 @@ def agents_upsert_sink(spark: SparkSession, raw_stream: DataFrame, dim_path: str
     from ..sources.sinks import merge_agents, write_agents
 
     deduped = (
-        raw_stream.select(
-            "value", F.from_json("value", S.ENVELOPE_STRUCT).alias("e")
-        )
-        .select(
-            "value",
-            F.col("e.id").alias("event_id"),
-            F.col("e.data.payload.timestamp").cast("timestamp").alias("ts"),
-        )
-        .filter(F.col("event_id").isNotNull() & F.col("ts").isNotNull())
-        .withWatermark("ts", WATERMARK_DELAY)
+        parse_stream(raw_stream)
+        .filter(F.col("ts").isNotNull())
+        .select("value", "event_id", "ts")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
 
