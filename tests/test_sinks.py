@@ -146,3 +146,34 @@ def test_write_event_log_appends_each_id_once(spark):
         assert log.count() == 4
         assert log.exceptAll(events(a, b, c, d)).count() == 0
         assert events(a, b, c, d).exceptAll(log).count() == 0
+
+
+def test_merge_agents_batch_row_wins_a_last_ts_tie(spark):
+    """A stored row and a batch row of one worker with the same
+    ``last_ts``: the batch row supplies the attributes (its events
+    arrived later, and the later arrival wins in ``agents_from_parsed``)
+    and ``date_joined`` keeps the smaller value."""
+    import datetime as dt
+
+    from twilio_event_streams_reporting_example_spark.sources.sinks import merge_agents
+    from twilio_event_streams_reporting_example_spark.taskrouter.schema import (
+        AGENT_COLUMNS,
+        SPARK_TYPE,
+    )
+
+    cols = [c for c, _ in AGENT_COLUMNS] + ["last_ts"]
+    schema = ", ".join(f"{c} {SPARK_TYPE[t]}" for c, t in AGENT_COLUMNS) + ", last_ts timestamp"
+    last_ts = dt.datetime(2024, 5, 1, 12, 0, 0)
+
+    def dim(email, joined):
+        row = dict.fromkeys(cols)
+        row.update(agent_uuid="W1", email=email, date_joined=joined, last_ts=last_ts)
+        return spark.createDataFrame([tuple(row[c] for c in cols)], schema)
+
+    stored = dim("stored@example.com", dt.datetime(2024, 5, 1, 8, 0, 0))
+    batch = dim("batch@example.com", dt.datetime(2024, 5, 1, 11, 0, 0))
+    merged = merge_agents(stored, batch).collect()
+    assert len(merged) == 1
+    assert merged[0]["email"] == "batch@example.com"
+    assert merged[0]["date_joined"] == dt.datetime(2024, 5, 1, 8, 0, 0)
+    assert merged[0]["last_ts"] == last_ts

@@ -93,14 +93,15 @@ def test_streaming_wide_parquet_sink_roundtrip(spark):
     full pipeline into date-partitioned parquet, read back, and match the
     batch recompute on terminal kinds (same layout as the batch sink, so
     report queries are storage-agnostic)."""
-    import json
     import os
 
     from twilio_event_streams_reporting_example_spark.plans.taskrouter import (
         taskrouter_segments_df,
     )
     from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
+        _spool,
         parse_stream,
+        run_available_now,
         wide_conversation_segments_stream,
         write_segments_stream,
     )
@@ -111,26 +112,19 @@ def test_streaming_wide_parquet_sink_roundtrip(spark):
 
     with tempfile.TemporaryDirectory() as d:
         indir = os.path.join(d, "in")
-        os.makedirs(indir)
         ordered = sorted(FIXTURE_EVENTS, key=lambda e: e["data"]["payload"]["timestamp"])
-        chunk = (len(ordered) + 3) // 4
-        for i in range(0, len(ordered), chunk):
-            p = os.path.join(indir, f"part-{i:04d}.json")
-            with open(p, "w") as f:
-                for e in ordered[i : i + chunk]:
-                    f.write(json.dumps(e) + "\n")
-            os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
+        _spool(indir, ordered, 4)
         raw = spark.readStream.format("text").option("maxFilesPerTrigger", 1).load(indir)
         wide = wide_conversation_segments_stream(parse_stream(raw))
-        q = (
+        run_available_now(
             write_segments_stream(wide, os.path.join(d, "fact"), os.path.join(d, "ck"))
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(300)
 
         back = spark.read.parquet(os.path.join(d, "fact"))
         assert "segment_date" in back.columns
+        # the batch fact's row format: every durable row has its own id
+        ids = back.agg(F.count("uuid").alias("n"), F.countDistinct("uuid").alias("k")).first()
+        assert ids["n"] == ids["k"] == back.count() > 0
         stream = back.filter(F.col("segment_kind").isin(TERMINAL_KINDS)).drop(
             "segment_date"
         )
@@ -192,7 +186,6 @@ def test_foreachbatch_agents_upsert_matches_batch(spark):
     """SURVEY Phase 2 item 12: the incremental foreachBatch dimension
     upsert, fed the fixture in chronological micro-batches, must converge
     to the same rows as the one-shot batch recompute."""
-    import json
     import os
     import tempfile
 
@@ -200,7 +193,9 @@ def test_foreachbatch_agents_upsert_matches_batch(spark):
         taskrouter_agents_df,
     )
     from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
+        _spool,
         agents_upsert_sink,
+        run_available_now,
     )
     from twilio_event_streams_reporting_example_spark.taskrouter.fixture import (
         FIXTURE_EVENTS,
@@ -209,25 +204,16 @@ def test_foreachbatch_agents_upsert_matches_batch(spark):
 
     with tempfile.TemporaryDirectory() as d:
         indir = os.path.join(d, "in")
-        os.makedirs(indir)
         ordered = sorted(FIXTURE_EVENTS, key=lambda e: e["data"]["payload"]["timestamp"])
-        chunk = (len(ordered) + 3) // 4
-        for i in range(0, len(ordered), chunk):
-            path = os.path.join(indir, f"part-{i:04d}.json")
-            with open(path, "w") as f:
-                for e in ordered[i : i + chunk]:
-                    f.write(json.dumps(e) + "\n")
-            os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+        _spool(indir, ordered, 4)
 
         raw = spark.readStream.format("text").option("maxFilesPerTrigger", 1).load(indir)
         dim_path = os.path.join(d, "agents_dim")
-        q = (
-            agents_upsert_sink(spark, raw, dim_path)
-            .option("checkpointLocation", os.path.join(d, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        run_available_now(
+            agents_upsert_sink(spark, raw, dim_path).option(
+                "checkpointLocation", os.path.join(d, "ckpt")
+            )
         )
-        q.awaitTermination(300)
 
         streamed = spark.read.parquet(dim_path).drop("last_ts")
         batch = taskrouter_agents_df(spark, fixture_df(spark))
@@ -527,6 +513,7 @@ def test_streaming_restart_exactly_once(spark, provider, buckets):
     )
     from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
         parse_stream,
+        run_available_now,
         wide_conversation_segments_stream,
         write_segments_stream,
     )
@@ -542,8 +529,7 @@ def test_streaming_restart_exactly_once(spark, provider, buckets):
             .load(indir)
         )
         wide = wide_conversation_segments_stream(parse_stream(raw), buckets=buckets)
-        q = write_segments_stream(wide, fact, ck).trigger(availableNow=True).start()
-        q.awaitTermination(300)
+        run_available_now(write_segments_stream(wide, fact, ck))
 
     provider_key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(provider_key, None)
@@ -626,6 +612,7 @@ def test_agent_status_restart_exactly_once(spark):
     )
     from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
         parse_stream,
+        run_available_now,
         wide_agent_status_stream,
         write_segments_stream,
     )
@@ -658,8 +645,7 @@ def test_agent_status_restart_exactly_once(spark):
                 .load(indir)
             )
             wide = wide_agent_status_stream(parse_stream(raw))
-            q = write_segments_stream(wide, fact, ck).trigger(availableNow=True).start()
-            q.awaitTermination(300)
+            run_available_now(write_segments_stream(wide, fact, ck))
 
         spool(ordered[:half], "a", 1_700_000_000)
         run_once()
@@ -697,6 +683,7 @@ def test_kafka_wire_schema_end_to_end(spark, tmp_path):
     )
     from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
         conversation_segments_stream,
+        run_available_now,
         run_fixture_stream,
     )
     from twilio_event_streams_reporting_example_spark.taskrouter.fixture import (
@@ -755,15 +742,12 @@ def test_kafka_wire_schema_end_to_end(spark, tmp_path):
         .parquet(indir)
     )
     seg = conversation_segments_stream(cloudevents_from_kafka_records(raw))
-    q = (
+    run_available_now(
         seg.writeStream.format("memory")
         .queryName("tr_kafka_wire_segments")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
     got = spark.table("tr_kafka_wire_segments")
     want = run_fixture_stream(spark, str(tmp_path / "textref"))
     want = want.select(*got.columns)
@@ -872,15 +856,15 @@ def test_agent_status_idle_ttl_bounds_state(spark, tmp_path):
     indefinitely and the late change still closes it — exact batch
     semantics. Both behaviors asserted on the same event sequence."""
     import datetime as dt
-    import json
-    import os
 
     from twilio_event_streams_reporting_example_spark.plans.taskrouter import (
         wide_project_stream,
     )
     from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
+        _spool,
         agent_status_emissions_stream,
         parse_stream,
+        run_available_now,
     )
 
     t0 = dt.datetime(2024, 7, 1, 8, 0, 0)
@@ -907,12 +891,7 @@ def test_agent_status_idle_ttl_bounds_state(spark, tmp_path):
 
     def run(name: str, idle_ttl):
         indir = str(tmp_path / f"in_{name}")
-        os.makedirs(indir)
-        for i, e in enumerate(evs):
-            p = os.path.join(indir, f"part-{i:04d}.json")
-            with open(p, "w") as f:
-                f.write(json.dumps(e) + "\n")
-            os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
+        _spool(indir, evs, len(evs))
         raw = (
             spark.readStream.format("text")
             .option("maxFilesPerTrigger", 1)
@@ -921,15 +900,12 @@ def test_agent_status_idle_ttl_bounds_state(spark, tmp_path):
         seg = wide_project_stream(
             agent_status_emissions_stream(parse_stream(raw), idle_ttl=idle_ttl)
         )
-        q = (
+        run_available_now(
             seg.writeStream.format("memory")
             .queryName(f"agent_ttl_{name}")
             .option("checkpointLocation", str(tmp_path / f"ck_{name}"))
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(300)
         return spark.sql(
             f"SELECT agent_uuid, date, activity_time FROM agent_ttl_{name}"
         ).collect()

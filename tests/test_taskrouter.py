@@ -108,3 +108,42 @@ def test_malformed_events_are_isolated(spark):
     )
     assert clean.count() == dirty.count()
     assert clean.exceptAll(dirty).count() == 0
+
+
+def test_batch_and_stream_admit_the_same_lines(spark):
+    """The batch ingest and the event stream admit through one rule:
+    TaskRouter types with an id, malformed lines dropped. The stream
+    passes a redelivered id on (its consumers drop it); the ingest keeps
+    its first arrival. ``withWatermark`` is a no-op on a batch frame."""
+    import json
+
+    from twilio_event_streams_reporting_example_spark.plans.taskrouter import (
+        ingest_taskrouter,
+    )
+    from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
+        parse_stream,
+    )
+
+    def event(eid, etype, **payload):
+        payload = {"timestamp": "2024-05-01T10:00:00.000Z", **payload}
+        e = {"type": etype, "data": {"payload": payload}}
+        if eid is not None:
+            e["id"] = eid
+        return json.dumps(e)
+
+    task = event("EV-T", "com.twilio.taskrouter.task.created", eventtype="task.created",
+                 task_sid="T1")
+    lines = [
+        task,
+        event("EV-W", "com.twilio.taskrouter.worker.created", eventtype="worker.created",
+              worker_sid="W1"),
+        task,  # redelivered
+        event("EV-X", "com.twilio.studio.flow.started", eventtype="flow.started"),
+        event(None, "com.twilio.taskrouter.task.canceled", eventtype="task.canceled",
+              task_sid="T1"),
+        "{not json",
+    ]
+    raw = _raw_df(spark, lines)
+    streamed = parse_stream(raw.select(F.col("raw").alias("value")))
+    assert sorted(r["event_id"] for r in streamed.collect()) == ["EV-T", "EV-T", "EV-W"]
+    assert sorted(r["event_id"] for r in ingest_taskrouter(raw).collect()) == ["EV-T", "EV-W"]

@@ -91,28 +91,26 @@ def payload_event_cols(p: Column) -> list[Column]:
     ]
 
 
+def admit_events(raw: DataFrame, line: str, *keep: str) -> DataFrame:
+    """CloudEvent JSON lines (column ``line``) → the admitted TaskRouter
+    events ``(event_id, *keep, p)``, ``p`` the payload struct: the batch
+    ingest and the event stream admit here. PERMISSIVE parse: a line
+    that fails the envelope schema has a null id and is dropped, which
+    mirrors the reference's per-event error isolation (events.js:672-674).
+    Redelivered ids pass through."""
+    env = raw.select(*keep, F.from_json(line, S.ENVELOPE_STRUCT).alias("e"))
+    return (
+        env.filter(F.col("e.type").startswith(S.TASKROUTER_PREFIX))
+        .filter(F.col("e.id").isNotNull())
+        .select(F.col("e.id").alias("event_id"), *keep, F.col("e.data.payload").alias("p"))
+    )
+
+
 def ingest_taskrouter(raw: DataFrame) -> DataFrame:
     """CloudEvent JSON strings → parsed, deduplicated event log (S1+S3).
-
-    ``raw``: (arrival_idx long, raw string). PERMISSIVE parse: events
-    that fail the envelope schema yield null ids and are dropped, which
-    mirrors the reference's per-event error isolation (events.js:672-674).
-    """
-    env = raw.select(
-        "arrival_idx", F.from_json("raw", S.ENVELOPE_STRUCT).alias("e")
-    ).select(
-        F.col("e.id").alias("event_id"),
-        "arrival_idx",
-        "e.type",
-        F.col("e.data.payload").alias("p"),
-    )
-
-    ev = env.filter(F.col("type").startswith(S.TASKROUTER_PREFIX)).filter(
-        F.col("event_id").isNotNull()
-    )
-
+    ``raw``: (arrival_idx long, raw string)."""
     # the shuffle on id carries the payload struct, not the projection
-    return dedup_first_arrival(ev).select(
+    return dedup_first_arrival(admit_events(raw, "raw", "arrival_idx")).select(
         "event_id", "arrival_idx", *payload_event_cols(F.col("p"))
     )
 

@@ -875,8 +875,9 @@ def _hourly_golden_rows() -> list[dict]:
 
     seen, counts = set(), {}
     for e in FIXTURE_EVENTS:
-        # same admission rules as parse_stream: taskrouter types only (the
-        # fixture plants a call-summary event to exercise the F1 filter)
+        # same admission rules as plans.taskrouter.admit_events: taskrouter
+        # types only (the fixture plants a call-summary event to exercise
+        # the F1 filter)
         if not e["type"].startswith(S.TASKROUTER_PREFIX) or e["id"] in seen:
             continue
         seen.add(e["id"])

@@ -17,7 +17,10 @@ The engine materializes three tables as parquet:
 This module is the one writer of each table, for the first
 materialization and the incremental merge alike (``sources.incremental``
 decides which rows and dates to write); the streaming agents upsert
-writes through :func:`write_agents` too.
+writes through :func:`write_agents` too. The fact has one row format,
+:func:`fact_rows`, which the streaming fact sink
+(``streaming.taskrouter_stream.write_segments_stream``) applies as well:
+every durable fact row carries a ``uuid``, batch or streamed.
 
 At 100 TB the event log is the big table; date partitioning plus
 parquet min-max on the sid columns replaces the reference's LokiJS
@@ -66,24 +69,30 @@ def write_event_log(events: DataFrame, path: str) -> None:
     )
 
 
+def fact_rows(segments: DataFrame) -> DataFrame:
+    """The fact's row format, the same for the batch and the streaming
+    writer: the row id (P12, reference events.js:217 ``uuid()``) is
+    minted at write time — the queryable views stay deterministic
+    (oracle-hashable); only durable rows carry the synthetic key — and
+    ``segment_date`` is the partition column."""
+    return segments.withColumn("uuid", F.expr("uuid()")).withColumn(
+        "segment_date", F.to_date("date")
+    )
+
+
 def write_segments(
     segments: DataFrame,
     path: str,
     keep: DataFrame | None = None,
     dates: Iterable = (),
 ) -> None:
-    """S5: conversations fact, partitioned by segment date.
-
-    The row id (P12, reference events.js:217 ``uuid()``) is minted at
-    write time — the queryable views stay deterministic (oracle-
-    hashable); only durable rows carry the synthetic key. ``keep`` holds
-    stored rows, written again with their own ids; it may read ``path``,
-    since the staged write finishes before the first swap. Every staged
-    date and every date in ``dates`` is swapped in: a date in ``dates``
-    with no rows loses its directory, other dates are not touched."""
-    rows = segments.withColumn("uuid", F.expr("uuid()")).withColumn(
-        "segment_date", F.to_date("date")
-    )
+    """S5: conversations fact in :func:`fact_rows` format, partitioned
+    by segment date. ``keep`` holds stored rows, written again with
+    their own ids; it may read ``path``, since the staged write finishes
+    before the first swap. Every staged date and every date in ``dates``
+    is swapped in: a date in ``dates`` with no rows loses its directory,
+    other dates are not touched."""
+    rows = fact_rows(segments)
     if keep is not None:
         rows = rows.unionByName(keep)
     staged, old = f"{path}__staging", f"{path}__old.{uuid.uuid4().hex}"
@@ -117,19 +126,24 @@ def write_agents(agents: DataFrame, path: str) -> None:
 def merge_agents(existing: DataFrame | None, batch_dim: DataFrame) -> DataFrame:
     """Latest-wins merge of a batch's agent rows into the current dim:
     newest ``last_ts`` supplies the whole attribute row + state/date_left
-    (each reference upsert fully overwrites, events.js:240-246);
+    (each reference upsert fully overwrites, events.js:240-246), and on a
+    ``last_ts`` tie the batch row wins, as the later arrival does in
+    ``agents_from_parsed``: batch events arrive after the stored ones.
     date_joined keeps the global minimum. On a table format with MERGE
     INTO (Delta/Iceberg) this plan becomes the MERGE source."""
-    merged = batch_dim if existing is None else existing.unionByName(batch_dim)
+    merged = batch_dim.withColumn("from_batch", F.lit(True))
+    if existing is not None:
+        merged = existing.withColumn("from_batch", F.lit(False)).unionByName(merged)
     attr_cols = [c for c, _ in AGENT_COLUMNS if c not in ("agent_uuid", "date_joined")]
     packed = merged.select(
         "agent_uuid",
         "date_joined",
         "last_ts",
+        "from_batch",
         F.struct(*attr_cols).alias("row"),
     )
     agg = packed.groupBy("agent_uuid").agg(
-        F.max_by("row", "last_ts").alias("row"),
+        F.max_by("row", F.struct("last_ts", "from_batch")).alias("row"),
         F.min("date_joined").alias("date_joined"),
         F.max("last_ts").alias("last_ts"),
     )

@@ -624,36 +624,28 @@ def parse_stream(raw: DataFrame) -> DataFrame:
     """CloudEvent JSON lines → watermarked event stream.
 
     ``raw``: a streaming DataFrame with a string ``value`` column (file/
-    Kafka source shape). Redelivered CloudEvents pass through: each
-    consumer drops them itself — the conversation lifecycle in its task
-    state (``_unapplied_events``), ``agent_status_emissions_stream``,
-    ``hourly_event_counts_stream`` and ``agents_upsert_sink`` with
-    ``dropDuplicatesWithinWatermark`` on ``event_id``."""
-    env = raw.select("value", F.from_json("value", S.ENVELOPE_STRUCT).alias("e")).select(
+    Kafka source shape), admitted as the batch ingest admits. Redelivered
+    CloudEvents pass through: each consumer drops them itself — the
+    conversation lifecycle in its task state (``_unapplied_events``),
+    ``agent_status_emissions_stream`` and ``hourly_event_counts_stream``.
+    Every output column crosses to the Python lifecycles through Arrow."""
+    from ..plans.taskrouter import admit_events
+
+    ev = admit_events(raw, "value", "value").select(
+        # the raw line rides along: the state machine stores it as the
+        # carrier for the wide projection downstream
         "value",
-        F.col("e.id").alias("event_id"),
-        F.col("e.type").alias("type"),
-        F.col("e.data.payload").alias("p"),
-    )
-    ev = (
-        env.filter(F.col("type").startswith(S.TASKROUTER_PREFIX))
-        .filter(F.col("event_id").isNotNull())
-        .select(
-            # the raw line rides along: the state machine stores it as the
-            # carrier for the wide projection downstream
-            "value",
-            "event_id",
-            F.col("p.eventtype").alias("eventtype"),
-            F.col("p.timestamp").cast("timestamp").alias("ts"),
-            F.col("p.task_sid").alias("task_sid"),
-            F.col("p.reservation_sid").alias("reservation_sid"),
-            F.col("p.worker_sid").alias("worker_sid"),
-            # closing value for the agent-status lifecycle (events.js:647)
-            F.col("p.worker_time_in_previous_activity").alias("wtip"),
-            F.get_json_object("p.task_attributes", "$.conversations.segment_link").alias(
-                "custom_segment_link"
-            ),
-        )
+        "event_id",
+        F.col("p.eventtype").alias("eventtype"),
+        F.col("p.timestamp").cast("timestamp").alias("ts"),
+        F.col("p.task_sid").alias("task_sid"),
+        F.col("p.reservation_sid").alias("reservation_sid"),
+        F.col("p.worker_sid").alias("worker_sid"),
+        # closing value for the agent-status lifecycle (events.js:647)
+        F.col("p.worker_time_in_previous_activity").alias("wtip"),
+        F.get_json_object("p.task_attributes", "$.conversations.segment_link").alias(
+            "custom_segment_link"
+        ),
     )
     return ev.withWatermark("ts", WATERMARK_DELAY)
 
@@ -733,12 +725,15 @@ def conversation_segments_stream(
 def write_segments_stream(wide: DataFrame, path: str, checkpoint: str):
     """S5 in streaming form: append the wide conversations fact to
     date-partitioned parquet as segments terminalize — the durable
-    complement of the batch ``sources.sinks.write_segments`` (same
-    layout, so the report queries read either). Exactly-once per
-    segment: the lifecycle drops redelivered CloudEvent ids in its task
-    state and the file sink commits atomically per micro-batch."""
+    complement of the batch ``sources.sinks.write_segments``, in the same
+    row format (``sources.sinks.fact_rows``: ``uuid`` and
+    ``segment_date``), so the report queries read either. Exactly-once
+    per segment: the lifecycle drops redelivered CloudEvent ids in its
+    task state and the file sink commits atomically per micro-batch."""
+    from ..sources.sinks import fact_rows
+
     return (
-        wide.withColumn("segment_date", F.to_date("date"))
+        fact_rows(wide)
         .writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
@@ -1048,34 +1043,36 @@ def agents_upsert_sink(spark: SparkSession, raw_stream: DataFrame, dim_path: str
     enough for a single writer). State per agent is one row — the
     dimension stays broadcast-sized.
 
-    Redelivery + ordering: the raw stream is parsed (``parse_stream``,
-    watermarked) and CloudEvent-id-deduplicated BEFORE the sink (the
-    guarantee the conversation lifecycle gives the segments path in its
-    task state, ``_unapplied_events``), so a duplicate delivered in a
-    LATER micro-batch cannot re-merge into the dimension.
-    Arrival order is unknowable in a distributed stream (redelivery,
-    repartitioning), so same-``ts`` ties break on the CloudEvent id — a
-    total order intrinsic to the data, identical on failure replay,
-    unlike ``monotonically_increasing_id``'s partition-dependent values."""
-    from ..plans.taskrouter import taskrouter_agents_df
+    Redelivery + ordering: each line is decoded once (``admit_events``,
+    ``payload_event_cols``), watermarked and CloudEvent-id-deduplicated
+    BEFORE the sink (the guarantee the conversation lifecycle gives the
+    segments path in its task state, ``_unapplied_events``), so a
+    duplicate delivered in a LATER micro-batch cannot re-merge into the
+    dimension; a micro-batch is not parsed again. Arrival order is
+    unknowable in a distributed stream (redelivery, repartitioning), so
+    same-``ts`` ties break on the CloudEvent id — a total order intrinsic
+    to the data, identical on failure replay, unlike
+    ``monotonically_increasing_id``'s partition-dependent values."""
+    from ..plans.taskrouter import admit_events, agents_from_parsed, payload_event_cols
     from ..sources.sinks import merge_agents, write_agents
 
+    # no worker-type filter before the watermark: Spark pushes a filter
+    # that does not read ``ts`` below it, which would change the late
+    # rows the dedup drops
     deduped = (
-        parse_stream(raw_stream)
+        admit_events(raw_stream, "value")
+        .select("event_id", *payload_event_cols(F.col("p")))
+        .withWatermark("ts", WATERMARK_DELAY)
         .filter(F.col("ts").isNotNull())
-        .select("value", "event_id", "ts")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         # the CloudEvent id doubles as the deterministic arrival
-        # substitute: ingest_taskrouter only ever ORDERS BY arrival_idx,
+        # substitute: agents_from_parsed only ever ORDERS BY arrival_idx,
         # so a string tiebreak column works unchanged
-        raw = batch_df.select(
-            F.col("event_id").alias("arrival_idx"),
-            F.col("value").alias("raw"),
-        )
-        batch_dim = taskrouter_agents_df(spark, raw, with_ordering=True)
+        parsed = batch_df.withColumn("arrival_idx", F.col("event_id"))
+        batch_dim = agents_from_parsed(parsed, with_ordering=True)
         if batch_dim.isEmpty():
             return
         existing = spark.read.parquet(dim_path) if os.path.exists(dim_path) else None
