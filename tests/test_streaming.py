@@ -413,7 +413,7 @@ def test_bucketed_lifecycle_hot_shard_fuzz(spark, tmp_path):
     # state-store parity: the open-task sets must be identical, so the
     # hot shard's document holds exactly the per-task survivors (state
     # growth bounded by the same watermark reaping in both keyings)
-    def _open_tasks(ckpt: str, bucketed: bool) -> set:
+    def _open_tasks(ckpt: str) -> set:
         # the lifecycle is the only stateful operator; probe operator
         # ids for the one whose value carries state_json
         rows = None
@@ -435,16 +435,10 @@ def test_bucketed_lifecycle_hot_shard_fuzz(spark, tmp_path):
             gs = r["value"]["groupState"]
             if gs is None or gs["state_json"] is None:
                 continue
-            doc = _json.loads(gs["state_json"])
-            if bucketed:
-                out.update(doc.get("t", {}).keys())
-            else:
-                out.add(r["key"][0])
+            out.update(_json.loads(gs["state_json"])["t"])
         return out
 
-    assert _open_tasks(str(tmp_path / "bkt"), True) == _open_tasks(
-        str(tmp_path / "per"), False
-    )
+    assert _open_tasks(str(tmp_path / "bkt")) == _open_tasks(str(tmp_path / "per"))
 
 
 @pytest.mark.parametrize("buckets", [None, 4], ids=["per_task", "bucketed"])
@@ -1016,8 +1010,8 @@ def test_agent_status_idle_ttl_timeout_clamped_to_watermark():
 
 def test_bucketed_rearm_clamps_to_watermark_plus_one():
     """A shard whose remaining min deadline EQUALS the current watermark
-    must re-arm at watermark+1, the rule the per-task and agent-status
-    functions follow: PySpark's GroupState.setTimeoutTimestamp rejects
+    must re-arm at watermark+1, the rule the agent-status function
+    follows too: PySpark's GroupState.setTimeoutTimestamp rejects
     only ts < watermark, so a deadline at the watermark would otherwise
     be armed as is. A deadline ahead of the watermark arms unchanged."""
     import datetime as dt
@@ -1027,7 +1021,7 @@ def test_bucketed_rearm_clamps_to_watermark_plus_one():
 
     from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
         CONVERSATION_TIMEOUT,
-        _bucket_lifecycle_fn,
+        _lifecycle_fn,
     )
 
     def ms(t):
@@ -1049,12 +1043,12 @@ def test_bucketed_rearm_clamps_to_watermark_plus_one():
     min_deadline = ms(t0 + CONVERSATION_TIMEOUT)
 
     at_wm = FakeState(min_deadline)
-    assert list(_bucket_lifecycle_fn((0,), iter([pdf]), at_wm)) == []
+    assert list(_lifecycle_fn((0,), iter([pdf]), at_wm)) == []
     assert sorted(json.loads(at_wm.stored[0])["t"]) == ["TA", "TB"]
     assert at_wm.armed == min_deadline + 1
 
     ahead = FakeState(min_deadline - 60_000)
-    list(_bucket_lifecycle_fn((0,), iter([pdf]), ahead))
+    list(_lifecycle_fn((0,), iter([pdf]), ahead))
     assert ahead.armed == min_deadline
 
 
@@ -1062,15 +1056,15 @@ def test_lifecycle_state_drops_redelivered_event_ids():
     """The lifecycle drops redelivered CloudEvents in its own state
     (``_unapplied_events``): a copy in the same micro-batch is skipped,
     and so is a copy in a later one. A task with nothing open keeps its
-    state, ids included, until its deadline under both keyings, so a
-    redelivered terminal event cannot emit its segment twice."""
+    state, ids included, until its deadline under both groupings (a
+    one-task group and a shard), so a redelivered terminal event cannot
+    emit its segment twice."""
     import datetime as dt
 
     import pandas as pd
 
     from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
         CONVERSATION_TIMEOUT,
-        _bucket_lifecycle_fn,
         _lifecycle_fn,
         _segment_rows_for_task,
         _unapplied_events,
@@ -1122,14 +1116,82 @@ def test_lifecycle_state_drops_redelivered_event_ids():
             "event_id": ["C1"],
         }
     )
-    for fn, key in ((_lifecycle_fn, ("T",)), (_bucket_lifecycle_fn, (0,))):
+    for key in (("T",), (0,)):
         state = FakeState(ms(t0) - 600_000)
-        first = list(fn(key, iter([pdf]), state))
-        assert [len(d) for d in first] == [1], fn.__name__
+        first = list(_lifecycle_fn(key, iter([pdf]), state))
+        assert [len(d) for d in first] == [1], key
         # nothing is open, yet the state stays until the task's deadline
-        assert state.exists, fn.__name__
-        assert state.armed == ms(t0 + CONVERSATION_TIMEOUT), fn.__name__
-        assert list(fn(key, iter([pdf.copy()]), state)) == [], fn.__name__
+        assert state.exists, key
+        assert state.armed == ms(t0 + CONVERSATION_TIMEOUT), key
+        assert list(_lifecycle_fn(key, iter([pdf.copy()]), state)) == [], key
+
+
+def test_lifecycle_timeout_reaps_expired_tasks_only():
+    """The timeout branch of the lifecycle state function. A one-task
+    group past its deadline emits CORRUPTED CONVERSATION for its open
+    accepted reservation and removes its state; a shard holding one
+    expired and one live task reaps only the expired task and re-arms
+    at the live task's deadline."""
+    import datetime as dt
+    import json
+
+    import pandas as pd
+
+    from twilio_event_streams_reporting_example_spark.streaming.taskrouter_stream import (
+        CONVERSATION_TIMEOUT,
+        _lifecycle_fn,
+    )
+    from twilio_event_streams_reporting_example_spark.taskrouter import schema as S
+
+    def ms(t):
+        return int(t.replace(tzinfo=dt.timezone.utc).timestamp() * 1000)
+
+    t0 = dt.datetime(2024, 7, 1, 8, 0, 0)
+
+    def accepted(task, rsid, at):
+        # created, then accepted: an open conversation with no terminal
+        return pd.DataFrame(
+            {
+                "eventtype": [S.ET_RESERVATION_CREATED, S.ET_RESERVATION_ACCEPTED],
+                "ts": [pd.Timestamp(at), pd.Timestamp(at + dt.timedelta(seconds=5))],
+                "task_sid": [task, task],
+                "reservation_sid": [rsid, rsid],
+                "worker_sid": ["W", "W"],
+                "value": [f"raw-{rsid}-created", f"raw-{rsid}-accepted"],
+                "event_id": [f"{rsid}-1", f"{rsid}-2"],
+            }
+        )
+
+    def timed_out(stored, watermark_ms):
+        state = FakeState(watermark_ms)
+        state.stored = stored
+        state.hasTimedOut = True
+        return state
+
+    deadline_a = ms(t0 + dt.timedelta(seconds=5) + CONVERSATION_TIMEOUT)
+    one = FakeState(ms(t0) - 600_000)
+    assert list(_lifecycle_fn(("TA",), iter([accepted("TA", "RA", t0)]), one)) == []
+    assert one.armed == deadline_a
+    fired = timed_out(one.stored, deadline_a + 1)
+    (out,) = _lifecycle_fn(("TA",), iter([]), fired)
+    assert list(out["segment_kind"]) == [S.CONVO_CORRUPTED]
+    assert list(out["carrier_raw"]) == ["raw-RA-accepted"]
+    assert not fired.exists
+
+    later = t0 + dt.timedelta(minutes=5)
+    deadline_b = ms(later + dt.timedelta(seconds=5) + CONVERSATION_TIMEOUT)
+    shard = FakeState(ms(t0) - 600_000)
+    both = pd.concat(
+        [accepted("TA", "RA", t0), accepted("TB", "RB", later)], ignore_index=True
+    )
+    assert list(_lifecycle_fn((0,), iter([both]), shard)) == []
+    assert shard.armed == deadline_a
+    fired = timed_out(shard.stored, deadline_a + 1)
+    (out,) = _lifecycle_fn((0,), iter([]), fired)
+    assert list(out["segment_kind"]) == [S.CONVO_CORRUPTED]
+    assert list(out["carrier_raw"]) == ["raw-RA-accepted"]
+    assert sorted(json.loads(fired.stored[0])["t"]) == ["TB"]
+    assert fired.armed == deadline_b
 
 
 def test_agent_status_machine_pure_fn_replay():

@@ -558,10 +558,10 @@ def _stream_golden_rows() -> list[dict]:
 
 
 def _stream_golden_rows_keyed() -> list[dict]:
-    """Both stream keyings must produce the SAME golden rows: the
-    per-task keying and the state-sharded bucketed keying (one state
-    document per hash bucket of tasks — the throughput path, 8x the
-    events/s; streaming/taskrouter_stream.py::_bucket_lifecycle_fn)."""
+    """Both stream groupings must produce the SAME golden rows: one
+    task per group and the bucketed grouping (one state document per
+    hash bucket of tasks — the throughput path, 8x the events/s); both
+    run streaming/taskrouter_stream.py::_lifecycle_fn."""
     rows = _stream_golden_rows()
     return [{**r, "keying": "per_task"} for r in rows] + [
         {**r, "keying": "bucketed"} for r in rows
@@ -771,13 +771,15 @@ def scale_stream_summary(
         "Structured Streaming lifecycle over the fixture (watermark + "
         "applyInPandasWithState, which drops redelivered CloudEvent ids "
         "in its task state; event-time timeout → CORRUPTED "
-        "CONVERSATION), run under BOTH "
-        "state keyings and union-tagged by `keying`: 'per_task' (one "
-        "state doc per task — the canonical form) and 'bucketed' (state "
-        "sharded over hash buckets of tasks — the throughput form, 8x "
-        "events/s, exact timeout parity via per-task deadline vs current "
-        "watermark). The oracle is the batch simulator's terminal "
-        "segments duplicated per keying — streaming/batch parity AND "
+        "CONVERSATION). One state function runs under BOTH "
+        "groupings, union-tagged by `keying`: 'per_task' (one task per "
+        "group — Spark's own per-key timeouts, the canonical form) and "
+        "'bucketed' (tasks sharded over hash buckets — the throughput "
+        "form, 8x events/s, exact timeout parity via each task's own "
+        "deadline vs the current watermark); both keep one state "
+        "document per group of tasks. The oracle is the batch "
+        "simulator's terminal segments duplicated per keying — "
+        "streaming/batch parity AND "
         "keying equivalence ARE the correctness claim. The "
         "'bucketed_scale' section is the STREAMING SCALE CERTIFICATE "
         "(round 15): 1M closed-form conversations — 5M CloudEvents, "

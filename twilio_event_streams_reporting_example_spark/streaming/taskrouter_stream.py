@@ -6,7 +6,7 @@ hazards — README.md:13 out-of-order, events.js:488 duplicate delivery):
   readStream (CloudEvent JSON lines)
     → envelope from_json + type filter              (S1, S3, F1)
     → withWatermark(ts)
-    → applyInPandasWithState keyed by task_sid      (§2.5 state machine)
+    → applyInPandasWithState keyed by shard         (§2.5 state machine)
         drops redelivered CloudEvent ids in the task's own state;
         emits QUEUE / CONVERSATION / terminal segments as reservations
         resolve; event-time timeout emits CORRUPTED CONVERSATION —
@@ -20,11 +20,11 @@ so no separate ``dropDuplicatesWithinWatermark`` stage commits its own
 state stores. Consumers without per-task state (the agent-status
 lifecycle, the hourly counts) deduplicate for themselves.
 
-The stateful operator keys on **task_sid** (not reservation_sid):
-every event of one conversation — queue entries, task aborts, and all
-reservation.* events — carries it, so one state key sees the whole
+The state machine runs per **task_sid** (not reservation_sid): every
+event of one conversation — queue entries, task aborts, and all
+reservation.* events — carries it, so one task state sees the whole
 lifecycle and the transfer re-queue case stays within one partition.
-State is O(events per task), kept until the task's deadline.
+Task state is O(events per task), kept until the task's deadline.
 
 The stateful operator emits NARROW rows: a branch tag, the segment
 kind, the computed override measures, and the raw CloudEvent that
@@ -41,10 +41,12 @@ This is the documented Pandas-UDF path (custom operator tier (b)):
 the per-key sequential state machine is genuinely order-dependent
 imperative logic that built-in operators can't express.
 
-One state machine, two keyings, both under ``applyInPandasWithState``:
-``_lifecycle_fn`` keys state by task (the reference every parity test
-compares against), and ``_bucket_lifecycle_fn`` shards tasks over hash
-buckets (``buckets=N``; the throughput path a deployment runs).
+One state function, two groupings: ``_lifecycle_fn`` keeps one state
+document per group — ``{"t": {task_sid: task state}}`` — and
+``segment_emissions_stream`` groups on a ``shard`` column that is the
+task itself (``buckets=None``: Spark's own per-key timeouts, the
+reference every parity test compares against) or a hash bucket of tasks
+(``buckets=N``: the throughput path a deployment runs).
 """
 
 from __future__ import annotations
@@ -102,11 +104,63 @@ CORE_COLUMNS = [
     "abandon_time",
 ]
 
-# State: one JSON document per task (entry anchor + per-reservation
-# correlation anchors + the CloudEvent ids already applied). JSON keeps
-# the schema evolvable; the payload is small (a handful of timestamps
-# per open reservation, one id per event).
+# State: one JSON document per group. The conversation lifecycle keeps
+# ``{"t": {task_sid: task state}}``, a task state holding the entry
+# anchor, the per-reservation correlation anchors and the CloudEvent ids
+# already applied. JSON keeps the schema evolvable; the payload is small
+# (a handful of timestamps per open reservation, one id per event).
 STATE_SCHEMA = T.StructType([T.StructField("state_json", T.StringType())])
+
+
+def _emit_row(
+    branch: str,
+    kind: str,
+    carrier_raw: str,
+    date: dt.datetime | None = None,
+    link: str | None = None,
+    link_set: bool = False,
+    **measures: int | None,
+) -> dict:
+    """One ``EMIT_SCHEMA`` row. The carrier event supplies every base
+    column downstream; only the branch-computed overrides travel as
+    explicit values (``measures`` named without their ``ov_`` prefix)."""
+    return {
+        "branch": branch,
+        "segment_kind": kind,
+        "carrier_raw": carrier_raw,
+        "ov_queue_time": measures.get("queue_time"),
+        "ov_ring_time": measures.get("ring_time"),
+        "ov_talk_time": measures.get("talk_time"),
+        "ov_wrapup_time": measures.get("wrapup_time"),
+        "ov_abandon_time": measures.get("abandon_time"),
+        "ov_activity_time": measures.get("activity_time"),
+        "ov_date": date,
+        "ov_segment_link": link,
+        "ov_segment_link_set": link_set,
+    }
+
+
+def _emit_frame(rows: list[dict]) -> pd.DataFrame:
+    """A state function's output batch: ``_emit_row`` rows as a frame."""
+    return pd.DataFrame(rows, columns=EMIT_SCHEMA.fieldNames())
+
+
+def _epoch_ms(t: dt.datetime) -> int:
+    """Epoch ms of a UTC-naive event time. The tz is pinned first: naive
+    .timestamp() reads the HOST timezone and would shift every timeout
+    by the UTC offset on non-UTC hosts."""
+    return int(t.replace(tzinfo=dt.timezone.utc).timestamp() * 1000)
+
+
+def _arm_timeout(state: GroupState, deadline_ms: int) -> None:
+    """Arm the group's event-time timeout at ``deadline_ms``, clamped to
+    watermark+1. A late event (admitted by the watermark policy but with
+    ts far behind the current watermark) can leave the deadline at or
+    behind the watermark, and Spark rejects a timeout behind it; the
+    group then times out next micro-batch — the semantics of Spark's own
+    per-key timeouts (a timeout set in batch N fires in batch N+1 at the
+    earliest). Found by the cross-batch disorder fuzz."""
+    state.setTimeoutTimestamp(max(deadline_ms, state.getCurrentWatermarkMs() + 1))
 
 
 def _dt(iso_us: str) -> dt.datetime:
@@ -131,24 +185,12 @@ def _segment_rows_for_task(
     out: list[dict] = []
     res: dict[str, Any] = st.setdefault("res", {})  # reservation_sid → anchors
 
-    def emit(branch, kind, ev, date_iso=None, link=None, link_set=False, **measures):
-        # the carrier event supplies every base column downstream; only
-        # the branch-computed overrides travel as explicit values
+    def emit(branch, kind, ev, date_iso=None, **overrides):
         out.append(
-            {
-                "branch": branch,
-                "segment_kind": kind,
-                "carrier_raw": ev.get("raw") or "",
-                "ov_queue_time": measures.get("queue_time"),
-                "ov_ring_time": measures.get("ring_time"),
-                "ov_talk_time": measures.get("talk_time"),
-                "ov_wrapup_time": measures.get("wrapup_time"),
-                "ov_abandon_time": measures.get("abandon_time"),
-                "ov_activity_time": None,
-                "ov_date": _trunc_s(date_iso) if date_iso else None,
-                "ov_segment_link": link,
-                "ov_segment_link_set": bool(link_set),
-            }
+            _emit_row(
+                branch, kind, ev.get("raw") or "",
+                _trunc_s(date_iso) if date_iso else None, **overrides,
+            )
         )
 
     for ev in events:
@@ -331,8 +373,8 @@ def _unapplied_events(events: list[dict], st: dict) -> list[dict]:
     source carries ``arrival_idx`` — the batch engine's "first arrival
     wins".
 
-    Why forgetting the ids at the task's deadline is safe: both keyings
-    keep a task's state until the watermark passes ``last_ts`` +
+    Why forgetting the ids at the task's deadline is safe: the lifecycle
+    keeps a task's state until the watermark passes ``last_ts`` +
     ``CONVERSATION_TIMEOUT``, and ``last_ts`` is the latest event time
     the task applied, so the timeout fires only once the watermark is
     past every id the state holds. The watermark never moves back, so
@@ -357,39 +399,8 @@ def _unapplied_events(events: list[dict], st: dict) -> list[dict]:
 
 
 def _deadline_ms(st: dict) -> int:
-    """Event-time timeout deadline for a task state, epoch ms.
-    Event timestamps are UTC-naive; pin the tz before the epoch
-    conversion — naive .timestamp() reads the HOST timezone and would
-    shift the timeout by the UTC offset on non-UTC hosts."""
-    last = dt.datetime.fromisoformat(st["last_ts"])
-    deadline = (last + CONVERSATION_TIMEOUT).replace(tzinfo=dt.timezone.utc)
-    return int(deadline.timestamp() * 1000)
-
-
-def _lifecycle_fn(
-    key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    st = json.loads(state.get[0]) if state.exists else {}
-    if state.hasTimedOut:
-        rows, _ = _segment_rows_for_task([], st, timed_out=True)
-        state.remove()
-    else:
-        events = _unapplied_events(_events_from_pdfs(pdf_iter), st)
-        rows, st = _segment_rows_for_task(events, st, timed_out=False)
-        # kept until the deadline even with nothing open: the state
-        # holds the applied ids (see _unapplied_events)
-        state.update((json.dumps(st),))
-        # a LATE event (admitted within the watermark policy but with
-        # ts far behind the current watermark) can yield a deadline
-        # already at/behind the watermark — Spark rejects past timeout
-        # timestamps, so clamp to watermark+1 and let the timeout fire
-        # next micro-batch (the same re-arm rule the bucketed keying
-        # uses; found by the cross-batch disorder fuzz)
-        deadline = _deadline_ms(st)
-        wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(deadline, wm + 1))
-    if rows:
-        yield pd.DataFrame(rows, columns=[f.name for f in EMIT_SCHEMA.fields])
+    """Event-time timeout deadline for a task state, epoch ms."""
+    return _epoch_ms(_dt(st["last_ts"]) + CONVERSATION_TIMEOUT)
 
 
 # Default idle horizon for agent-status state. 7 days is >> any
@@ -439,21 +450,9 @@ def _agent_status_fn_factory(idle_ttl: dt.timedelta | None):
         if st:
             state.update((json.dumps(st),))
             if idle_ttl is not None:
-                expiry = (_dt(st["ts"]) + idle_ttl).replace(tzinfo=dt.timezone.utc)
-                # a late worker event (admitted by the watermark policy
-                # but with ts far behind the watermark) can leave the
-                # expiry at/behind the current watermark — Spark rejects
-                # past timeout timestamps, so clamp to watermark+1 and
-                # let the reap fire next micro-batch (same re-arm rule
-                # as _lifecycle_fn)
-                state.setTimeoutTimestamp(
-                    max(
-                        int(expiry.timestamp() * 1000),
-                        state.getCurrentWatermarkMs() + 1,
-                    )
-                )
+                _arm_timeout(state, _epoch_ms(_dt(st["ts"]) + idle_ttl))
         if rows:
-            yield pd.DataFrame(rows, columns=[f.name for f in EMIT_SCHEMA.fields])
+            yield _emit_frame(rows)
 
     return fn
 
@@ -469,20 +468,7 @@ def _agent_rows_for_worker(events: list[dict], st: dict) -> tuple[list[dict], di
     for ev in events:
         if open_raw is not None:
             rows.append(
-                {
-                    "branch": "agent",
-                    "segment_kind": S.AGENT_STATUS,
-                    "carrier_raw": open_raw,
-                    "ov_queue_time": None,
-                    "ov_ring_time": None,
-                    "ov_talk_time": None,
-                    "ov_wrapup_time": None,
-                    "ov_abandon_time": None,
-                    "ov_activity_time": ev["wtip"],
-                    "ov_date": None,
-                    "ov_segment_link": None,
-                    "ov_segment_link_set": False,
-                }
+                _emit_row("agent", S.AGENT_STATUS, open_raw, activity_time=ev["wtip"])
             )
         open_raw, open_ts = ev["raw"], ev["ts"]
     return rows, ({"raw": open_raw, "ts": open_ts} if open_raw is not None else {})
@@ -513,7 +499,7 @@ def agent_status_emissions_stream(
     )
 
 
-LIFECYCLE_BUCKETS = 1024  # default shard count for the bucketed variant
+LIFECYCLE_BUCKETS = 1024  # default shard count for the bucketed grouping
 # Target open tasks per shard document: the shard JSON value is
 # rewritten per touched micro-batch, so its size — open tasks/shard —
 # is the knob that trades per-group protocol overhead (fewer, fatter
@@ -521,21 +507,17 @@ LIFECYCLE_BUCKETS = 1024  # default shard count for the bucketed variant
 LIFECYCLE_TARGET_TASKS_PER_SHARD = 64
 
 
-def lifecycle_buckets(
-    expected_open_tasks: int,
-    cores: int | None = None,
-    target_per_shard: int = LIFECYCLE_TARGET_TASKS_PER_SHARD,
-) -> int:
+def lifecycle_buckets(expected_open_tasks: int, cores: int | None = None) -> int:
     """Derive the shard count for the bucketed lifecycle — the API form
     of the scale rule (like ``semdedup_n_cells``), so sizing a real
     deployment is a function call, not prose.
 
     Two constraints, take the max:
-      - state size: ~``target_per_shard`` open tasks per shard document
-        keeps the per-batch rewrite cost O(target) as open-task count
-        grows (open tasks are watermark-bounded, so ``expected_open_
-        tasks`` is conversation-timeout-bounded concurrency, not total
-        volume);
+      - state size: ~``LIFECYCLE_TARGET_TASKS_PER_SHARD`` open tasks per
+        shard document keeps the per-batch rewrite cost O(target) as
+        open-task count grows (open tasks are watermark-bounded, so
+        ``expected_open_tasks`` is conversation-timeout-bounded
+        concurrency, not total volume);
       - parallelism: at least 4 shards per executor core so the
         stateful stage saturates the cluster even when only a fraction
         of shards receive events in a micro-batch.
@@ -543,81 +525,65 @@ def lifecycle_buckets(
     membership predictably (state is NOT portable across bucket counts
     — changing N needs a state rebuild, same as repartitioning any
     keyed state store)."""
-    need_state = -(-max(1, expected_open_tasks) // max(1, target_per_shard))
+    need_state = -(-max(1, expected_open_tasks) // LIFECYCLE_TARGET_TASKS_PER_SHARD)
     need_par = 4 * (cores or 1)
     n = max(need_state, need_par, 1)
     return 1 << (n - 1).bit_length()
 
 
-def _bucket_lifecycle_fn(
+def _lifecycle_fn(
     key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """State-sharded lifecycle: one state document per HASH BUCKET of
-    tasks instead of one per task. Same state machine, same emissions —
-    the shard wrapper only routes. Why: applyInPandasWithState pays a
-    fixed per-group pandas/protocol cost (~0.5-1 ms); at one group per
-    task that cost IS the throughput ceiling (~15k events/s measured).
-    With tasks sharded over LIFECYCLE_BUCKETS groups the overhead
-    amortizes across every task in the shard (~5x measured) while state
-    size per group stays bounded by the tasks per shard still inside
-    their deadline.
+    """The conversation lifecycle's one state function. Its group — a
+    shard, one task or a hash bucket of tasks (``segment_emissions_
+    stream``) — keeps one document, ``{"t": {task_sid: task state}}``,
+    and each task runs through ``_segment_rows_for_task``; the shard
+    only routes. Why bucket: applyInPandasWithState pays a fixed
+    per-group pandas/protocol cost (~0.5-1 ms); at one group per task
+    that cost IS the throughput ceiling (~15k events/s measured). With
+    tasks sharded over LIFECYCLE_BUCKETS groups the overhead amortizes
+    across every task in the shard (~5x measured) while state size per
+    group stays bounded by the tasks per shard still inside their
+    deadline.
 
-    Timeout parity with the per-task variant is EXACT, not wave-
-    approximate: the shard's timeout is the MIN deadline over its open
-    tasks, and on every firing the reap condition is the task's own
-    deadline vs the CURRENT WATERMARK (state.getCurrentWatermarkMs) —
-    the same predicate Spark applies per key in the per-task scheme, so
-    a task expires in the same micro-batch under either keying. A shard
-    whose remaining min deadline is already at/behind the watermark
-    re-arms one ms past the watermark and reaps next micro-batch — the
-    per-task scheme's own semantics (a timeout set in batch N fires in
-    batch N+1 at the earliest)."""
-    st = json.loads(state.get[0]) if state.exists else {}
-    tasks: dict = st.setdefault("t", {})
-    rows: list[dict] = []
-    if state.hasTimedOut:
-        wm = state.getCurrentWatermarkMs()
-        for sid in list(tasks):
-            if _deadline_ms(tasks[sid]) <= wm:
-                out, _ = _segment_rows_for_task([], tasks[sid], timed_out=True)
-                rows.extend(out)
-                del tasks[sid]
-    else:
-        events = _events_from_pdfs(pdf_iter)
-        by_task: dict[str, list] = {}
-        for ev in events:  # stable partition of the globally-sorted list
+    Timeouts are exact under either grouping: the shard's timeout is
+    the MIN deadline over its tasks, and a task is reaped when its own
+    deadline is at or behind the CURRENT WATERMARK
+    (state.getCurrentWatermarkMs) and it has no data in this call. With
+    one task per shard that is Spark's own per-key timeout; with many,
+    each task expires in the micro-batch it would expire in alone."""
+    st = json.loads(state.get[0]) if state.exists else {"t": {}}
+    tasks: dict = st["t"]
+    by_task: dict[str, list] = {}
+    if not state.hasTimedOut:
+        for ev in _events_from_pdfs(pdf_iter):  # stable partition of the sorted list
             by_task.setdefault(ev["task_sid"], []).append(ev)
-        # Reap co-resident expired tasks FIRST: under per-task keying,
-        # a key with no data this batch whose timeout passed the
-        # watermark fires hasTimedOut this same micro-batch — but a
-        # shard receiving data for OTHER tasks arrives here with
-        # hasTimedOut=False, so the expired-but-dataless tasks must be
-        # reaped explicitly (same predicate: own deadline vs current
-        # watermark). Without this, a later event for the expired task
-        # would continue stale state instead of per-task behavior
-        # (timeout emission, then fresh state).
-        wm = state.getCurrentWatermarkMs()
-        for sid in list(tasks):
-            if sid not in by_task and _deadline_ms(tasks[sid]) <= wm:
-                out, _ = _segment_rows_for_task([], tasks[sid], timed_out=True)
-                rows.extend(out)
-                del tasks[sid]
-        for sid, evs in by_task.items():
-            # every task stays until its own deadline, open or not: its
-            # document holds the applied ids (see _unapplied_events)
-            tst = tasks.setdefault(sid, {})
-            out, _ = _segment_rows_for_task(
-                _unapplied_events(evs, tst), tst, timed_out=False
-            )
+    rows: list[dict] = []
+    # Reap before applying data: a shard receiving data for OTHER tasks
+    # arrives with hasTimedOut=False, yet a task alone in its group would
+    # time out in this micro-batch, so its expiry is checked here too.
+    # Without this, a later event for the expired task would continue
+    # stale state instead of timing out and starting fresh.
+    wm = state.getCurrentWatermarkMs()
+    for sid in list(tasks):
+        if sid not in by_task and _deadline_ms(tasks[sid]) <= wm:
+            out, _ = _segment_rows_for_task([], tasks.pop(sid), timed_out=True)
             rows.extend(out)
+    for sid, evs in by_task.items():
+        # every task stays until its own deadline, open or not: its
+        # document holds the applied ids (see _unapplied_events)
+        tst = tasks.setdefault(sid, {})
+        out, _ = _segment_rows_for_task(
+            _unapplied_events(evs, tst), tst, timed_out=False
+        )
+        rows.extend(out)
     if tasks:
         state.update((json.dumps(st),))
-        nxt = min(_deadline_ms(t) for t in tasks.values())
-        state.setTimeoutTimestamp(max(nxt, state.getCurrentWatermarkMs() + 1))
+        _arm_timeout(state, min(_deadline_ms(t) for t in tasks.values()))
     elif state.exists:
         state.remove()
     if rows:
-        yield pd.DataFrame(rows, columns=[f.name for f in EMIT_SCHEMA.fields])
+        yield _emit_frame(rows)
 
 
 def parse_stream(raw: DataFrame) -> DataFrame:
@@ -654,30 +620,25 @@ def segment_emissions_stream(
     events: DataFrame, buckets: int | None = None
 ) -> DataFrame:
     """The stateful conversation lifecycle over a parsed event stream —
-    narrow (branch, kind, carrier, overrides) emissions.
-    ``buckets=N`` shards state over N hash buckets of tasks instead of
-    one group per task (same emissions; the throughput path — see
-    ``_bucket_lifecycle_fn``)."""
-    filtered = events.filter(F.col("task_sid").isNotNull())
-    if buckets:
-        # materialize the shard key as a column first: the stateful
-        # operator requires grouping attributes of the child plan
-        keyed = filtered.withColumn(
-            "bucket", F.pmod(F.xxhash64("task_sid"), F.lit(buckets))
-        ).groupBy("bucket")
-        return keyed.applyInPandasWithState(
-            _bucket_lifecycle_fn,
+    narrow (branch, kind, carrier, overrides) emissions. One
+    ``_lifecycle_fn`` over a ``shard`` grouping column: the task itself
+    by default, or one of ``buckets=N`` hash buckets of tasks (same
+    emissions; the throughput path)."""
+    task = F.col("task_sid")
+    shard = F.pmod(F.xxhash64(task), F.lit(buckets)) if buckets else task
+    # materialize the shard key as a column first: the stateful
+    # operator requires grouping attributes of the child plan
+    return (
+        events.filter(task.isNotNull())
+        .withColumn("shard", shard)
+        .groupBy("shard")
+        .applyInPandasWithState(
+            _lifecycle_fn,
             EMIT_SCHEMA,
             STATE_SCHEMA,
             "append",
             GroupStateTimeout.EventTimeTimeout,
         )
-    return filtered.groupBy("task_sid").applyInPandasWithState(
-        _lifecycle_fn,
-        EMIT_SCHEMA,
-        STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
     )
 
 
@@ -896,7 +857,7 @@ def run_scale_stream(
       and the replay-split tests, not re-proven here.
     - **Bucketed lifecycle** (``buckets`` defaulting to
       ``lifecycle_buckets`` at this session's core count): the
-      throughput keying is the one a 100 TB deployment runs, so it is
+      throughput grouping is the one a 100 TB deployment runs, so it is
       the one the certificate exercises.
     - **RocksDB state store + 16 shuffle partitions for the stream**:
       the lifecycle state holds every applied CloudEvent id of a task
